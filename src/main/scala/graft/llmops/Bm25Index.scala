@@ -115,6 +115,15 @@ object Bm25Index {
     * record deletion subtracts from the additive stats. Includes
     * empty-text docs (dl = 0): they are corpus members with no
     * postings, and without this row deleting one could not adjust n.
+    *
+    * Store contract for `path/doclens`: the store may hold SEVERAL rows
+    * per id, so readers must dedupe doclens rows by id. [[append]]
+    * writes doclens concurrently with its stats row (the commit
+    * marker), so a crash after the doclens append leaves rows that a
+    * replay of the same batch appends again. The readers relying on
+    * this are [[scores]] (the tombstone stats subtraction),
+    * [[compact]] and [[compactVersioned]]; each calls
+    * `dropDuplicates("id")` before using the rows.
     */
   private def docLens(docs: DataFrame, idCol: String, textCol: String,
                       batchTag: String): DataFrame =
@@ -181,25 +190,26 @@ object Bm25Index {
     // row to land after the postings (it is the batch's commit
     // marker), which the pool barrier preserves; the lens checkpoint
     // writes nothing externally visible.
-    val lensSlot = new java.util.concurrent.atomic.AtomicReference[DataFrame]
-    Par.run(Seq(
-      () => newDocs.select(col(idCol).as("id"),
-          TextFuncs.tokenCount(col(textCol)).cast("double").as("dl"),
-          explode(TextFuncs.tokens(col(textCol))).as("term"))
-        .filter(col("term") =!= "")
-        .groupBy(col("id"), col("term"))
-        .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-        .withColumn("term_bucket",
-          pmod(xxhash64(col("term")), lit(nBuckets)))
-        .repartition(col("term_bucket"))
-        .write.mode("append").partitionBy("term_bucket")
-        .parquet(s"$path/postings"),
+    val lens = Par.run(Seq[() => Option[DataFrame]](
+      () => {
+        newDocs.select(col(idCol).as("id"),
+            TextFuncs.tokenCount(col(textCol)).cast("double").as("dl"),
+            explode(TextFuncs.tokens(col(textCol))).as("term"))
+          .filter(col("term") =!= "")
+          .groupBy(col("id"), col("term"))
+          .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
+          .withColumn("term_bucket",
+            pmod(xxhash64(col("term")), lit(nBuckets)))
+          .repartition(col("term_bucket"))
+          .write.mode("append").partitionBy("term_bucket")
+          .parquet(s"$path/postings")
+        None
+      },
       // stats derive from the pinned lens frame — see [[write]];
       // eager checkpoint so the frame is built inside this slot, not
       // lazily by the two sequential writes below
-      () => lensSlot.set(docLens(newDocs, idCol, textCol, batchTag)
-        .localCheckpoint())))
-    val lens = lensSlot.get()
+      () => Some(docLens(newDocs, idCol, textCol, batchTag)
+        .localCheckpoint()))).flatten.head
     // stats is the commit marker (strictly after postings); doclens
     // rows dedupe by id at serve, so the two appends can overlap
     Par.run(Seq(

@@ -151,8 +151,9 @@ object Dedup {
       (p.bands, p.rowsPerBand)
     }
 
-  /** Pin a signature table that feeds multiple plan branches so the
-    * sketch kernel runs once per document. Default is
+  /** Pin a frame that feeds multiple plan branches (a signature
+    * table, an exact join's prefix or candidate table) so the kernel
+    * beneath it runs once per call. Default is
     * `localCheckpoint` — cheap, but the blocks are executor-local and
     * UNREPLICATED: on a real cluster an executor loss fails the job
     * mid-query. Set `spark.graft.dedup.reliableSigs=true` to persist
@@ -698,13 +699,17 @@ object Dedup {
     val wDoc = Window.partitionBy(col("id"))
       .orderBy(col("__df"), col("term"))
     val wN = Window.partitionBy(col("id"))
-    val prefix = toks.join(dfTab, Seq("term"))
+    // prefix feeds both sides of the self-join, and cand feeds candIds
+    // twice plus the verify. Pin both: above a cached input AQE reuses
+    // no exchange, so each read would re-run the explode, the df
+    // aggregate and the windows beneath it
+    val prefix = pinSigs(toks.join(dfTab, Seq("term"))
       .withColumn("__n", count(lit(1)).over(wN))
       .withColumn("__pos", row_number().over(wDoc))
       .filter(col("__pos") <=
         col("__n") - ceil(lit(threshold) * col("__n")) + 1)
-      .select(col("id"), col("term"), col("__n"))
-    val cand = prefix.select(col("id").as("id_a"), col("term"),
+      .select(col("id"), col("term"), col("__n")))
+    val cand = pinSigs(prefix.select(col("id").as("id_a"), col("term"),
         col("__n").as("__na"))
       .join(prefix.select(col("id").as("id_b"), col("term"),
         col("__n").as("__nb")), Seq("term"))
@@ -712,7 +717,7 @@ object Dedup {
       .filter(greatest(col("__na"), col("__nb")) * threshold <=
         least(col("__na"), col("__nb")))
       .select(col("id_a"), col("id_b"))
-      .distinct()
+      .distinct())
     val candIds = cand.select(col("id_a").as(idCol))
       .unionByName(cand.select(col("id_b").as(idCol)))
       .distinct()
@@ -775,20 +780,22 @@ object Dedup {
     val wDoc = Window.partitionBy(col("id"))
       .orderBy(col("__df"), col("term"))
     val wN = Window.partitionBy(col("id"))
-    val ranked = toks.join(dfTab, Seq("term"))
+    // ranked feeds both the prefix and the postings side, cand feeds
+    // candIds twice plus the verify — pinned as in jaccardJoinExact
+    val ranked = pinSigs(toks.join(dfTab, Seq("term"))
       .withColumn("__n", count(lit(1)).over(wN))
-      .withColumn("__pos", row_number().over(wDoc))
+      .withColumn("__pos", row_number().over(wDoc)))
     val prefix = ranked
       .filter(col("__pos") <=
         col("__n") - ceil(lit(threshold) * col("__n")) + 1)
       .select(col("id").as("id_a"), col("term"), col("__n").as("__na"))
     val postings = ranked
       .select(col("id").as("id_b"), col("term"), col("__n").as("__nb"))
-    val cand = prefix.join(postings, Seq("term"))
+    val cand = pinSigs(prefix.join(postings, Seq("term"))
       .filter(col("id_a") =!= col("id_b"))
       .filter(lit(threshold) * col("__na") <= col("__nb"))
       .select(col("id_a"), col("id_b"))
-      .distinct()
+      .distinct())
     val candIds = cand.select(col("id_a").as(idCol))
       .unionByName(cand.select(col("id_b").as(idCol)))
       .distinct()

@@ -25,10 +25,11 @@ private[graft] object Par {
       try futs.map(_.get())
       catch {
         // unwrap so callers see the real failure, not the pool's —
-        // and cancel the still-running siblings FIRST: a failed
-        // write must not return to the caller while background
-        // threads keep writing into the same index path (the caller
-        // may clean up or retry against it)
+        // and cancel the siblings first. cancel(true) only interrupts
+        // the driver threads: a sibling not yet started never runs,
+        // but a Spark job a sibling already submitted keeps running on
+        // the executors until it ends. Stopping those writes before
+        // the caller sees the failure is best-effort, not guaranteed
         case e: java.util.concurrent.ExecutionException =>
           futs.foreach(_.cancel(true))
           throw e.getCause

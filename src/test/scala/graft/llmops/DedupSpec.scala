@@ -737,6 +737,55 @@ class DedupSpec extends SparkTestBase {
     assert(Dedup.jaccardJoinExact(planted, 0.5, n = 3).count() == 0L)
   }
 
+  test("jaccardJoinExact / containmentJoinExact: one call and collect " +
+      "runs each prefix and candidate stage once (bounded Spark job " +
+      "count per job group)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // the suite's CACHED documents: above a cached input AQE reuses no
+    // exchange (each cached scan becomes its own table-cache stage), so
+    // an unpinned subtree read k times runs k times — the shape of a
+    // curation job that caches its exact-dedup survivors
+    val input = docs.select($"doc_id", $"text")
+    docs.count() // build the cache outside the counted groups
+    val sc = spark.sparkContext
+    // counts the jobs started under `group`; a sentinel job run after
+    // the body reaches the listener after every earlier event, so its
+    // start marks the count as final
+    def jobsIn(group: String)(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val sentinel = s"$group-sentinel"
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(`group`) => jobs.incrementAndGet()
+            case Some(`sentinel`) => drained.countDown()
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, group)
+        try body finally sc.clearJobGroup()
+        sc.setJobGroup(sentinel, sentinel)
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "listener bus did not deliver the sentinel job")
+      } finally sc.removeSparkListener(listener)
+      jobs.get
+    }
+    val jac = jobsIn("dedupspec-jaccard") {
+      Dedup.jaccardJoinExact(input).collect() }
+    val con = jobsIn("dedupspec-containment") {
+      Dedup.containmentJoinExact(input).collect() }
+    // measured: 13 jobs each with the prefix and candidate frames
+    // pinned; 43 (jaccard) and 45 (containment) when every reference
+    // re-ran them. The bound leaves a few jobs of slack for AQE's
+    // broadcast-or-shuffle choices
+    assert(jac > 0 && jac <= 16, s"jaccardJoinExact ran $jac jobs")
+    assert(con > 0 && con <= 16, s"containmentJoinExact ran $con jobs")
+  }
+
   test("crossSourceDupMatrix: closed-form pair counts from counts, " +
       "no pair materialization semantics; repartition-stable") {
     // hash x: A×2, B×1 → (A,A)=1, (A,B)=2; z: B×2 → (B,B)=1; y unique
