@@ -1,56 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
+  // Env knobs shared by Bench, Verify and graft.tools.Run, read here once.
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** local[cpus] and as many shuffle partitions; default min(32, nproc). */
+  private[graft] def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors))
+  private[graft] def passes: Int =
+    sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
+  // SPARK_GRAFT_QUERIES: comma-separated name prefixes to run a subset
+  // — the committed sf1 mode (BASELINE.md) runs the iterative/ANN
+  // queries against tmpdata/sf1, which carries only the
+  // documents/embeddings tables; Verify and the tools use it for fast
+  // local iteration on one query. Unset = all.
+  private lazy val subset = sys.env.get("SPARK_GRAFT_QUERIES")
+    .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+  private[graft] def selected(name: String): Boolean =
+    subset.forall(_.exists(name.startsWith))
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // bounded-buffer object aggs (CollectTopK, HLL) hash safely far
-      // beyond Spark's 128-group sort-fallback default — see Graft.session
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      // The 100-entry default codegen class cache thrashes under the
-      // iterative lifecycle operators (k-means/PQ training + encode +
-      // serve produce hundreds of distinct generated classes per
-      // query): every task then RE-compiles its projections behind
-      // the compile KeyLock, serializing short stages — thread dumps
-      // showed 23/32 task threads blocked on that lock. Sized to hold
-      // a full lifecycle run; entries are soft-referenced, so this is
-      // a cap, not a reservation.
-      .config("spark.sql.codegen.cache.maxEntries", "3000")
-      // AQE's parallelism-first coalescing targets
-      // max(shuffleBytes/parallelism, minPartitionSize); the 1m default
-      // floor serializes compute-dense slim shuffles (string-kernel
-      // verifies, exploded-gram windows: KBs of bytes, seconds of CPU)
-      // onto a handful of cores. 64k keeps every core busy whenever a
-      // shuffle holds ≥ 64k·cores bytes and is a no-op at production
-      // shuffle sizes, where bytes/parallelism is far above 1m anyway.
-      // Measured 2x on the exact-join tiers (OPTIMIZATION_r14.md);
-      // override via spark.sql.adaptive.coalescePartitions.minPartitionSize.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "64k")
-      .config("spark.ui.enabled", "false")
-      // match Graft.session(): the bench must measure the plans the
-      // library gives its users — RewriteWindowTopK + SQL registry on
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_QUERIES: comma-separated name prefixes to bench a
-    // subset — the committed sf1 mode (BASELINE.md) runs the
-    // iterative/ANN queries against tmpdata/sf1, which carries only
-    // the documents/embeddings tables. Unset = the full set.
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    val spark = Graft.session(s"local[$cpus]", cpus)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        subset.forall(_.exists(name.startsWith)) }
+      .filter { case (name, _) => selected(name) }
     // warmup pass: JIT + codegen + parquet footer caches, untimed.
     // Failures are remembered so the timed loop can surface them in the
     // artifact instead of silently recording time-to-exception.

@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions.{coalesce, col, lit}
   */
 object Graft {
 
-  /** Session with the engine's extensions, tuned local defaults. */
+  /** Session with the engine's extensions, tuned local defaults: the
+    * one session builder of the library, its drivers, tools and tests. */
   def session(master: String = "local[*]", shufflePartitions: Int = 32)
       : SparkSession = {
     val s = SparkSession.builder()
@@ -44,11 +45,15 @@ object Graft {
       // a full lifecycle run; entries are soft-referenced, so this is
       // a cap, not a reservation.
       .config("spark.sql.codegen.cache.maxEntries", "3000")
-      // AQE's parallelism-first coalescing floors partitions at 1m,
-      // which serializes compute-dense slim shuffles (string-kernel
-      // verifies, exploded-gram windows) onto a few cores; 64k keeps
-      // cores busy on such stages and is a no-op once shuffle
-      // bytes/parallelism exceeds 1m (any production-scale shuffle).
+      // AQE's parallelism-first coalescing targets
+      // max(shuffleBytes/parallelism, minPartitionSize); the 1m default
+      // floor serializes compute-dense slim shuffles (string-kernel
+      // verifies, exploded-gram windows: KBs of bytes, seconds of CPU)
+      // onto a handful of cores. 64k keeps every core busy whenever a
+      // shuffle holds >= 64k*cores bytes and is a no-op at production
+      // shuffle sizes, where bytes/parallelism is far above 1m anyway.
+      // Measured 2x on the exact-join tiers (OPTIMIZATION_r14.md);
+      // A/B other floors with `graft.tools.Run ab`.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         "64k")
       .withExtensions(new GraftExtensions)

@@ -15,11 +15,12 @@ import graft.llmops.{CompressionRatio, MinHashSignature, SimHash, SimHash128, Wi
   * `spark.graft.rewriteWindowTopK=false`):
   *
   * {{{
-  * val spark = SparkSession.builder()
-  *   .withExtensions(new GraftExtensions).getOrCreate()
+  * val spark = graft.Graft.session()  // registers these extensions
   * spark.sql("SELECT resolve_url(href, base), simhash64(text) FROM t")
   * }}}
   *
+  * A session built elsewhere opts in with
+  * `.withExtensions(new GraftExtensions)` on its builder.
   * Injection keeps everything session-scoped — no global registry
   * mutation, so multiple sessions with different extension sets coexist
   * (matters on shared clusters).

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,50 +11,18 @@ object Verify {
     // part independently. Verify-only: Bench leaves the flag unset and
     // skips the writes.
     System.setProperty("graft.materialize", "1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench/Graft.session: bounded object-agg buffers hash
-      // safely past Spark's 128-group sort-fallback default
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      // The 100-entry default codegen class cache thrashes under the
-      // iterative lifecycle operators (k-means/PQ training + encode +
-      // serve produce hundreds of distinct generated classes per
-      // query): every task then RE-compiles its projections behind
-      // the compile KeyLock, serializing short stages — thread dumps
-      // showed 23/32 task threads blocked on that lock. Sized to hold
-      // a full lifecycle run; entries are soft-referenced, so this is
-      // a cap, not a reservation.
-      .config("spark.sql.codegen.cache.maxEntries", "3000")
-      // match Bench/Graft.session: keep compute-dense slim shuffles
-      // parallel under AQE coalescing (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "64k")
-      .config("spark.ui.enabled", "false")
-      // match Graft.session(): verify the plans users actually get
-      // (RewriteWindowTopK + SQL function registry active)
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(s"local[${Bench.cpus}]", Bench.cpus)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_QUERIES: same comma-separated name-prefix subset as
-    // Bench, for fast local iteration on one query. The driver never
-    // sets it → full dump.
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    // why each failed query failed, for tools/check.py to report
+    val errs = scala.collection.mutable.Map.empty[String, String]
     SparkEntry.queries
-      .filter { case (name, _) => subset.forall(_.exists(name.startsWith)) }
+      .filter { case (name, _) => Bench.selected(name) }
       .foreach { case (name, fn) =>
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          errs(name) = s"${e.getClass.getSimpleName}: ${e.getMessage}"
         }
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -70,9 +37,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/_errors.json"), obj(errs.toSeq.sorted))
     spark.stop()
   }
 }

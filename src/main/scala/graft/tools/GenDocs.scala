@@ -14,9 +14,9 @@ import org.apache.spark.sql.SparkSession
   * Deterministic: every row derives from splitmix64(doc_id), no RNG
   * state — rerunning or repartitioning yields identical bytes.
   *
-  *   sbt "runMain graft.tools.GenDocs <rows> <outDir>"
+  *   sbt "runMain graft.tools.Run gen-docs [rows] [outDir]"
   */
-object GenDocs {
+private[tools] object GenDocs {
   private val vocab: Array[String] = Array(
     "batch", "part", "spark", "line", "column", "order", "small", "sort",
     "fast", "value", "scan", "merge", "join", "shuffle", "stage", "task",
@@ -36,16 +36,7 @@ object GenDocs {
     Array.tabulate(n)(i => vocab((math.abs(mix64(id * 131 + i)) % vocab.length).toInt))
   }
 
-  def main(args: Array[String]): Unit = {
-    val rows = if (args.length > 0) args(0).toLong else 50000L
-    val out = if (args.length > 1) args(1) else "/root/repo/tmpdata/sf1"
-    val spark = SparkSession.builder()
-      .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def write(rows: Long, out: String)(spark: SparkSession): Unit = {
     import spark.implicits._
 
     val docs = spark.range(rows).map { id =>
@@ -134,6 +125,5 @@ object GenDocs {
     events.coalesce(8).write.mode("overwrite")
       .parquet(s"$out/events.parquet")
     println(s"wrote $eventRows rows to $out/events.parquet")
-    spark.stop()
   }
 }

@@ -9,6 +9,17 @@ import org.apache.spark.sql.functions._
 class GraftFacadeSpec extends SparkTestBase {
   import spark.implicits._
 
+  test("facade: the test session is Graft.session's product profile") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "3000")
+    assert(conf.get(
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "65536")
+    assert(conf.get(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize") == "64k")
+    // GraftExtensions: its SQL functions resolve
+    assert(spark.catalog.functionExists("resolve_url"))
+  }
+
   test("facade: load → dedup → similarity → text analysis round trip") {
     val docs = Graft.documents(spark, sf0001)
     val deduped = Graft.minhashDedup(docs)

@@ -34,12 +34,16 @@ def main(sf_dir, out_dir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
+    # graft.Verify records why a query failed; older dumps lack the file
+    errors_path = f"{out_dir}/_errors.json"
+    errors = json.load(open(errors_path)) if os.path.exists(errors_path) else {}
     n_ok = n_bad = 0
     for name in sorted(oracles):
         sql = oracles[name]
         pdir = f"{out_dir}/{name}"
         if not os.path.isdir(pdir):
-            print(f"FAIL  {name}: no spark output dir"); n_bad += 1; continue
+            reason = f" ({errors[name]})" if name in errors else ""
+            print(f"FAIL  {name}: no spark output dir{reason}"); n_bad += 1; continue
         try:
             spark_df = canon(pd.concat(
                 [pd.read_parquet(f) for f in glob.glob(f"{pdir}/*.parquet")],
