@@ -1154,21 +1154,19 @@ object SparkEntry {
     // lookarounds the joint-pair rules need, so it can't be mirrored
     // in DuckDB SQL directly).
     "q40_links_replay" -> ((s, d) => {
+      import s.implicits._
       val path = "/root/reference/ir_links/financial_links_3M.txt"
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
-        val links = graft.io.LineFormats.readLinks(s, path)
-        materialize(
-          graft.pipeline.Extract.docsWithYearQuarter(links, maxYear = 2025),
-          "links3m_yq")
-        graft.pipeline.Extract.latestQuarterReports(links, maxYear = 2025)
-          .orderBy(col("url"))
-      } else {
-        t(s, d, "documents").limit(0)
-          .select(lit("").as("title"), lit("").as("category"),
-            lit("").as("url"), lit("").as("source_url"),
-            lit("").as("file_extension"), lit(0).as("year"),
-            lit(0).as("quarter"))
-      }
+      // without the reference file the same path runs on no links, so
+      // links3m_yq exists (empty) and the oracle agrees on no rows
+      val links =
+        if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+          graft.io.LineFormats.readLinks(s, path)
+        else graft.io.LineFormats.parseLinks(Seq.empty[String].toDF("value"))
+      materialize(
+        graft.pipeline.Extract.docsWithYearQuarter(links, maxYear = 2025),
+        "links3m_yq")
+      graft.pipeline.Extract.latestQuarterReports(links, maxYear = 2025)
+        .orderBy(col("url"))
     }),
 
     // ops.ConnectedComponents over the MinHash near-dup pair graph:

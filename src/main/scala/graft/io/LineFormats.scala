@@ -23,7 +23,14 @@ object LineFormats {
     * no match (src/orchestrator.py:116-119).
     */
   def readLinks(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
+    parseLinks(spark.read.text(path))
+
+  /** [[readLinks]] over lines already read: a frame with one string
+    * column `value`. An empty one gives an empty frame with
+    * [[readLinks]]' schema.
+    */
+  def parseLinks(lines: DataFrame): DataFrame =
+    lines
       .filter(col("value").rlike("url='[^']"))
       .select(
         field("title"), field("text"),

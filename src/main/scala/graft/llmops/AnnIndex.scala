@@ -3,6 +3,8 @@ package graft.llmops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.ParquetStore
+
 /** Persisted, list-partitioned ANN index — the serving layout for
   * similarity search at corpus scale. [[write]] materializes the
   * corpus as parquet PARTITIONED BY the coarse list id, each row
@@ -52,11 +54,11 @@ object AnnIndex {
               corpusId: String = "vec_id"): Unit = {
     if (!dirExists(spark, s"$path/_tombstones/ids")) return
     val (cents, books) = loadModels(spark, path)
-    val metrics = spark.read.parquet(s"$path/_stats/metrics")
+    val metrics = ParquetStore.read(spark, s"$path/_stats/metrics")
       .localCheckpoint() // materialized: its parent dir is overwritten
-    val tombs = spark.read.parquet(s"$path/_tombstones/ids")
+    val tombs = ParquetStore.read(spark, s"$path/_tombstones/ids")
       .select(col("id").as(corpusId)).distinct()
-    val live = spark.read.parquet(path)
+    val live = ParquetStore.read(spark, path)
       .join(tombs, Seq(corpusId), "left_anti")
       .localCheckpoint()
     // The root overwrite below deletes _models/_stats along with the
@@ -280,11 +282,12 @@ object AnnIndex {
     val probes = Ivf.withLut(queries, queryVec, books, scan)
       .withColumn("list_id",
         explode(Ivf.nearest_centroids(col(queryVec), cents, nprobe)))
-    // driver-side probe set: ≤ nprobe·|queries| ints — the query
-    // batch is broadcast-bound anyway, so this collect is bounded
-    val probedLists = probes.select(col("list_id")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val codedAll = spark.read.parquet(path)
+    // driver-side probe set: nprobe·|queries| ints — the query batch
+    // is broadcast-bound anyway, so this collect is bounded, and the
+    // dedupe runs here rather than as a distinct shuffle
+    val probedLists = probes.select(col("list_id"))
+      .collect().map(_.getInt(0)).distinct.toSeq
+    val codedAll = ParquetStore.read(spark, path)
       .filter(col("list_id").isin(probedLists: _*))
     // tombstoned ids drop via an anti-join over the PROBED rows only —
     // cost scales with the probe set, and absence of the store (the
@@ -292,7 +295,7 @@ object AnnIndex {
     val coded =
       if (dirExists(spark, s"$path/_tombstones/ids"))
         codedAll.join(
-          spark.read.parquet(s"$path/_tombstones/ids")
+          ParquetStore.read(spark, s"$path/_tombstones/ids")
             .select(col("id").as(corpusId)).distinct(),
           Seq(corpusId), "left_anti")
       else codedAll

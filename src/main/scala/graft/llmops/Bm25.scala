@@ -81,18 +81,36 @@ object Bm25 {
     */
   private[llmops] def contribs(tf: DataFrame, stats: DataFrame,
                                k1: Double, b: Double): DataFrame = {
-    val df = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val idf = df.crossJoin(broadcast(stats.select(col("n"))))
-      .select(col("term"),
-        log(lit(1.0) + (col("n") - col("df") + 0.5) /
-          (col("df") + 0.5)).as("idf"))
+    val idf = docFreqs(tf).crossJoin(broadcast(stats.select(col("n"))))
+      .select(col("term"), idfOf(col("n")))
     tf.join(broadcast(idf), Seq("term"))
       .crossJoin(broadcast(stats.select(col("avgdl"))))
-      .withColumn("contrib",
-        col("idf") * (col("tf") * (k1 + 1)) /
-          (col("tf") +
-            lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl"))))
+      .withColumn("contrib", contribOf(col("avgdl"), k1, b))
   }
+
+  /** [[contribs]] with (n, avgdl) known on the driver: they enter the
+    * plan as literals, so it carries no stats stages and no cross
+    * joins. Same expressions, so the same stats values give
+    * bit-identical contributions.
+    */
+  private[llmops] def contribs(tf: DataFrame, n: Double, avgdl: Double,
+                               k1: Double, b: Double): DataFrame = {
+    val idf = docFreqs(tf).select(col("term"), idfOf(lit(n)))
+    tf.join(broadcast(idf), Seq("term"))
+      .withColumn("contrib", contribOf(lit(avgdl), k1, b))
+  }
+
+  private def docFreqs(tf: DataFrame): DataFrame =
+    tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
+
+  /** Lucene-form idf over a `df` column. */
+  private def idfOf(n: Column): Column =
+    log(lit(1.0) + (n - col("df") + 0.5) / (col("df") + 0.5)).as("idf")
+
+  /** tf-saturated, length-normalized contribution over `idf`, `tf`, `dl`. */
+  private def contribOf(avgdl: Column, k1: Double, b: Double): Column =
+    col("idf") * (col("tf") * (k1 + 1)) /
+      (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / avgdl))
 
   /** Shared per-query ranking tail: 4-decimal round → [[CollectTopK]]
     * bounded heap → dense rk → broadcast metadata join-back. The three
@@ -193,12 +211,20 @@ object Bm25 {
                                  queryTextCol: String,
                                  seg: Segmenter = Segmenter.CharLevel)
       : DataFrame =
+    queryTokens(queries, queryIdCol, queryTextCol, seg).distinct()
+
+  /** [[queryTerms]] before its dedupe: one (__qid, term) row per query
+    * token, for a caller that dedupes the collected rows itself.
+    */
+  private[llmops] def queryTokens(queries: DataFrame, queryIdCol: String,
+                                  queryTextCol: String,
+                                  seg: Segmenter = Segmenter.CharLevel)
+      : DataFrame =
     queries
       .filter(col(queryIdCol).isNotNull && col(queryTextCol).isNotNull)
       .select(col(queryIdCol).cast("long").as("__qid"),
         explode(TextFuncs.tokens(col(queryTextCol), seg)).as("term"))
       .filter(col("term") =!= "")
-      .distinct()
 
   /** Per-query top-k over [[scoresBatch]] via the [[CollectTopK]]
     * bounded-heap aggregate — ≤ k candidates per partition per query

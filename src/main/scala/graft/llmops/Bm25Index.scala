@@ -3,6 +3,8 @@ package graft.llmops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.ParquetStore
+
 /** Persisted, bucket-partitioned lexical (BM25) index — the
   * tokenize-once / serve-many seam for the lexical side of retrieval,
   * mirroring [[AnnIndex]]'s lifecycle for the vector side. Every
@@ -172,7 +174,7 @@ object Bm25Index {
     // postings instead. Fail loudly; upsert is delete → compact →
     // append (what Retrieval.upsertDocs sequences).
     if (dirExists(spark, s"$path/tombstones")) {
-      val doomed = spark.read.parquet(s"$path/tombstones")
+      val doomed = ParquetStore.read(spark, s"$path/tombstones")
         .select(col("id")).distinct()
       val clash = newDocs.select(col(idCol).cast("long").as("id"))
         .join(doomed, Seq("id"), "left_semi").limit(1).count()
@@ -182,8 +184,7 @@ object Bm25Index {
           "double-counted stats; run compact first (or " +
           "Retrieval.upsertDocs, which sequences delete/compact/append)")
     }
-    val nBuckets = spark.read.parquet(s"$path/params")
-      .select(col("n_buckets")).head().getInt(0)
+    val nBuckets = bucketsOf(spark, path)
     // the postings write and the doclens materialization are the
     // batch's two independent tokenize passes — overlap them (guide
     // §2.6). The crash-window dedupe contract only needs the STATS
@@ -249,13 +250,13 @@ object Bm25Index {
     */
   def compact(spark: SparkSession, path: String): Unit = {
     if (!dirExists(spark, s"$path/tombstones")) return
-    val tombs = spark.read.parquet(s"$path/tombstones")
+    val tombs = ParquetStore.read(spark, s"$path/tombstones")
       .select(col("id")).distinct()
-    val posts = spark.read.parquet(s"$path/postings")
+    val posts = ParquetStore.read(spark, s"$path/postings")
       .join(tombs, Seq("id"), "left_anti")
       .dropDuplicates("id", "term")
       .localCheckpoint() // materialized: its source dir is overwritten
-    val lens = spark.read.parquet(s"$path/doclens")
+    val lens = ParquetStore.read(spark, s"$path/doclens")
       .dropDuplicates("id")
       .join(tombs, Seq("id"), "left_anti")
       .select(col("id"), col("dl"))
@@ -288,14 +289,61 @@ object Bm25Index {
       append(batch, path, idCol, textCol, batchTag = s"stream-$batchId")
     }
 
-  /** Multi-query BM25 scores served from the written index: the query
-    * batch's distinct terms resolve to their buckets DRIVER-side (the
-    * term set is broadcast-bounded by construction), the postings scan
-    * plans with a static `term_bucket IN (...)` partition filter, and
-    * everything downstream — df from the read postings, idf, per-term
-    * contributions, per-query fan-out — is the [[Bm25.scoresBatch]]
-    * dataflow over the PERSISTED slim rows. Returns
+  /** Most query-term rows one [[scores]] batch may bring to the
+    * driver: (query, token) pairs before the dedupe, a few MB of rows.
+    */
+  private[llmops] val MaxQueryTermRows = 100000
+
+  /** The index's bucket count, from `path/params`. Memoized by the
+    * store's file listing: no job once read, and a re-[[write]] at the
+    * same path (new params files) reloads it.
+    */
+  private def bucketsOf(spark: SparkSession, path: String): Int =
+    ParquetStore.small(spark, s"$path/params", "bm25-n-buckets")(
+      _.select(col("n_buckets")).head().getInt(0))
+
+  /** (n_docs, sum_dl) summed over the additive stats rows, a `batch`
+    * tag (new layouts) deduping crash-window replays of one ingest
+    * batch. The rows are tiny (one per write, append or compact), so
+    * they collect in one job and the dedupe and the sums run on the
+    * driver. Every sum_dl is an integral double, so the sum is exact
+    * in any order. Memoized by the store's file listing.
+    */
+  private def servedStats(spark: SparkSession, path: String)
+      : (Long, Double) =
+    ParquetStore.small(spark, s"$path/stats", "bm25-stats") { raw =>
+      // a layout without the tag dedupes nothing: every row its own key
+      val rows = raw.select(col("n_docs"), col("sum_dl"),
+          if (raw.columns.contains("batch")) col("batch")
+          else monotonically_increasing_id())
+        .collect().groupBy(_.get(2)).values.map(_.head).toSeq
+      (rows.map(_.getAs[Number](0).longValue).sum,
+        rows.map(_.getAs[Number](1).doubleValue).sum)
+    }
+
+  /** Multi-query BM25 scores served from the written index. Returns
     * (queryIdCol, idCol, n_terms_hit, score).
+    *
+    * The query side makes ONE driver round-trip: the batch's
+    * (qid, term, bucket) rows collect in one job, at most
+    * [[MaxQueryTermRows]] of them, and dedupe on the driver. The
+    * bucket list becomes a static `term_bucket IN (...)` partition
+    * filter on the postings scan, the distinct terms a term filter on
+    * it, and the (qid, term) pairs ship back as a local relation.
+    *
+    * The corpus stats (n, avgdl) enter the plan as literals: the
+    * params and stats stores are read on the driver and memoized
+    * ([[bucketsOf]], [[servedStats]]), so a serve of an unchanged index
+    * runs the query-term collect and the scan's jobs only, and the
+    * first serve after an append adds one stats collect. With
+    * tombstones present, the tombstoned docs' exact (count, summed
+    * length) come from one more aggregate job over doclens. Every dl
+    * is an integral double, so these driver sums equal the former
+    * in-plan aggregates bit for bit.
+    *
+    * Downstream — df from the read postings, idf, per-term
+    * contributions, per-query fan-out — is the [[Bm25.scoresBatch]]
+    * dataflow over the PERSISTED slim rows.
     */
   def scores(spark: SparkSession, path: String, queries: DataFrame,
              k1: Double = 1.2, b: Double = 0.75,
@@ -304,60 +352,53 @@ object Bm25Index {
              queryTextCol: String = "text"): DataFrame = {
     import spark.implicits._
     Bm25.requireIntegralId(queries, queryIdCol, "query")
-    val nBuckets = spark.read.parquet(s"$path/params")
-      .select(col("n_buckets")).head().getInt(0)
-    // ONE driver round-trip for the whole query-side protocol: the
-    // term set is broadcast-bounded by construction (it was already
-    // collected for the bucket list), so collecting (qid, term,
-    // bucket) together replaces the previous checkpoint-then-collect
-    // pair of jobs and re-ships the terms as a local relation — the
-    // serve path's driver jobs drop to params + this + the scan
-    val qtRows = Bm25.queryTerms(queries, queryIdCol, queryTextCol)
+    val nBuckets = bucketsOf(spark, path)
+    // one partition, so the limit's take is one job whatever the
+    // query frame's partitioning
+    val qtRows = Bm25.queryTokens(queries, queryIdCol, queryTextCol)
       .select(col("__qid"), col("term"),
         pmod(xxhash64(col("term")), lit(nBuckets)).as("__b"))
+      .coalesce(1).limit(MaxQueryTermRows + 1)
       .collect()
-    val qTerms = qtRows.toSeq
-      .map(r => (r.getLong(0), r.getString(1))).toDF("__qid", "term")
-    val buckets = qtRows.map(_.getLong(2)).distinct.toSeq
-    // additive stats rows sum to the union corpus; a `batch` tag (new
-    // layouts) dedupes crash-window replays of the same ingest batch
-    val statsRaw = spark.read.parquet(s"$path/stats")
-    val statsBase = (if (statsRaw.columns.contains("batch"))
-        statsRaw.dropDuplicates("batch") else statsRaw)
+    require(qtRows.length <= MaxQueryTermRows,
+      s"Bm25Index.scores: the query batch against $path has more than " +
+        s"$MaxQueryTermRows query-term rows; split the batch")
+    val qt = qtRows.map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .distinct.toSeq
+    val qTerms = qt.map(x => (x._1, x._2)).toDF("__qid", "term")
+    val uniqTerms = qt.map(_._2).distinct
+    val buckets = qt.map(_._3).distinct
     val hasTombs = dirExists(spark, s"$path/tombstones")
     val tombs =
       if (hasTombs)
-        spark.read.parquet(s"$path/tombstones").select(col("id")).distinct()
+        ParquetStore.read(spark, s"$path/tombstones")
+          .select(col("id")).distinct()
       else null
     // tombstoned docs subtract their EXACT (count, summed length) from
     // the additive stats via doclens — every dl is an integral double,
     // so (s0 - ds) / (n0 - dn) equals a fresh stats pass over the
     // surviving corpus bit for bit
-    val stats =
+    val (n0, s0) = servedStats(spark, path)
+    val (dn, ds) =
       if (hasTombs) {
-        val del = spark.read.parquet(s"$path/doclens")
+        val del = ParquetStore.read(spark, s"$path/doclens")
           .dropDuplicates("id")
           .join(tombs, Seq("id"), "left_semi")
-          .agg(count(lit(1)).cast("double").as("__dn"),
-            coalesce(sum(col("dl")), lit(0.0)).as("__ds"))
-        statsBase
-          .agg(sum(col("n_docs")).cast("double").as("__n0"),
-            sum(col("sum_dl")).cast("double").as("__s0"))
-          .crossJoin(del)
-          .select((col("__n0") - col("__dn")).as("n"),
-            ((col("__s0") - col("__ds")) / (col("__n0") - col("__dn")))
-              .as("avgdl"))
-      } else
-        statsBase.agg(sum(col("n_docs")).cast("double").as("n"),
-          (sum(col("sum_dl")) / sum(col("n_docs"))).as("avgdl"))
-    val uniqTerms = qTerms.select(col("term")).distinct()
-    // (id, term) is unique by the id-uniqueness contract, so exact
-    // duplicate posting rows can only be a replayed partial append —
-    // dropDuplicates on the SLIM matched set makes the crash window
-    // harmless at serve time
-    val tfAll = spark.read.parquet(s"$path/postings")
+          .agg(count(lit(1)).cast("double"),
+            coalesce(sum(col("dl")), lit(0.0)))
+          .head()
+        (del.getDouble(0), del.getDouble(1))
+      } else (0.0, 0.0)
+    val n = n0.toDouble - dn
+    val avgdl = (s0 - ds) / n
+    // the term set filters the scan itself (no broadcast stage, which
+    // AQE would finish before it started the scan). (id, term) is
+    // unique by the id-uniqueness contract, so exact duplicate posting
+    // rows can only be a replayed partial append — dropDuplicates on
+    // the SLIM matched set makes the crash window harmless at serve time
+    val tfAll = ParquetStore.read(spark, s"$path/postings")
       .filter(col("term_bucket").isin(buckets: _*)) // partition pruning
-      .join(broadcast(uniqTerms), Seq("term"))
+      .filter(col("term").isin(uniqTerms: _*))
       .select(col("id"), col("term"), col("tf"), col("dl"))
       .dropDuplicates("id", "term")
     // the anti-join runs on the already term-matched slim rows, so its
@@ -365,7 +406,7 @@ object Bm25Index {
     // these rows downstream) reflects the deletion automatically
     val tf =
       if (hasTombs) tfAll.join(tombs, Seq("id"), "left_anti") else tfAll
-    Bm25.contribs(tf, stats, k1, b)
+    Bm25.contribs(tf, n, avgdl, k1, b)
       .join(broadcast(qTerms), Seq("term"))
       .groupBy(col("__qid"), col("id"))
       .agg(count(lit(1)).as("n_terms_hit"), sum(col("contrib")).as("score"))

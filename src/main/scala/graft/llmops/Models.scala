@@ -2,6 +2,8 @@ package graft.llmops
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
+import graft.io.ParquetStore
+
 /** Parquet persistence for ANN model parameters — coarse centroids and
   * product-quantizer codebooks. This is the train-once / serve-many
   * seam behind every `*WithCentroids` / `*WithBooks` / `*WithModels`
@@ -39,9 +41,11 @@ object Models {
     * array from explicit (code, sdim) indices, so it is insensitive
     * to parquet row order.
     */
-  def loadCentroids(spark: SparkSession, path: String): Array[Array[Float]] = {
-    val rows = spark.read.parquet(path)
-      .select("code", "sdim", "w").collect()
+  def loadCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
+    centroidsOf(spark.read.parquet(path))
+
+  private def centroidsOf(table: DataFrame): Array[Array[Float]] = {
+    val rows = table.select("code", "sdim", "w").collect()
     rebuild2(rows.map(r => (r.getInt(0), r.getInt(1), r.getFloat(2))))
   }
 
@@ -62,9 +66,11 @@ object Models {
 
   /** Load codebooks saved by [[saveCodebooks]]. */
   def loadCodebooks(spark: SparkSession, path: String)
-      : Array[Array[Array[Float]]] = {
-    val rows = spark.read.parquet(path)
-      .select("sub", "code", "sdim", "w").collect()
+      : Array[Array[Array[Float]]] =
+    codebooksOf(spark.read.parquet(path))
+
+  private def codebooksOf(table: DataFrame): Array[Array[Array[Float]]] = {
+    val rows = table.select("sub", "code", "sdim", "w").collect()
     val bySub = rows.groupBy(_.getInt(0))
     Array.tabulate(if (bySub.isEmpty) 0 else bySub.keys.max + 1) { sub =>
       rebuild2(bySub.getOrElse(sub, Array.empty[Row])
@@ -82,11 +88,23 @@ object Models {
     saveCodebooks(spark, s"$dir/codebooks", books)
   }
 
-  /** Load a model saved by [[saveIvfAdc]]: (centroids, codebooks). */
+  /** Load a model saved by [[saveIvfAdc]]: (centroids, codebooks).
+    * Every ANN serve and append loads its model, so the weights are
+    * memoized by the stores' file listings ([[graft.io.ParquetStore.small]]):
+    * a repeat load runs no Spark job, any re-save reloads, and the two
+    * stores load side by side. The caller gets its own copy of the
+    * arrays.
+    */
   def loadIvfAdc(spark: SparkSession, dir: String)
-      : (Array[Array[Float]], Array[Array[Array[Float]]]) =
-    (loadCentroids(spark, s"$dir/centroids"),
-      loadCodebooks(spark, s"$dir/codebooks"))
+      : (Array[Array[Float]], Array[Array[Array[Float]]]) = {
+    val Seq(centsA, booksA) = Par.run(Seq[() => AnyRef](
+      () => ParquetStore.small(spark, s"$dir/centroids",
+        "ivfadc-centroids")(centroidsOf),
+      () => ParquetStore.small(spark, s"$dir/codebooks",
+        "ivfadc-codebooks")(codebooksOf)))
+    (centsA.asInstanceOf[Array[Array[Float]]].map(_.clone),
+      booksA.asInstanceOf[Array[Array[Array[Float]]]].map(_.map(_.clone)))
+  }
 
   /** Save an OPQ model (rotation matrix + PQ codebooks trained in the
     * rotated space) under one directory: `dir/rotation`,

@@ -86,11 +86,9 @@ object Run {
     val lines = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val site = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
-        starts.put(js.jobId, (js.time, site, js.stageInfos.map(_.numTasks).sum))
-      }
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        starts.put(js.jobId, (js.time, jobSite(js),
+          js.stageInfos.map(_.numTasks).sum))
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
         val ms = (for {s <- si.submissionTime; c <- si.completionTime}
@@ -115,6 +113,17 @@ object Run {
     lines.asScala.foreach(println)
     println(f"TOTAL $name: $total%.3f s, $n rows, ${starts.size} jobs")
   }
+
+  /** A job's call site: Spark 4's SQL jobs carry no `callSite.short`
+    * property, but their result stage (the last one) is named after it,
+    * e.g. `parquet at Bm25Index.scala:307`. AQE submits its query
+    * stages from a `CompletableFuture`, so those jobs name that. */
+  private[tools] def jobSite(js: SparkListenerJobStart): String =
+    js.stageInfos.sortBy(_.stageId).lastOption.map(_.name) match {
+      case Some(n) if n.contains("CompletableFuture") => "AQE stage job"
+      case Some(n) => n
+      case None => "?"
+    }
 
   /** Formatted physical plans, to audit scan pushdown, broadcast and
     * window-limit choices. */

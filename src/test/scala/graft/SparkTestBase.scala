@@ -12,4 +12,35 @@ object SparkTestBase {
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   def sf0001: String = SparkTestBase.sf0001
+
+  /** The Spark jobs `body` starts, counted under the job group `group`
+    * (set on this thread, so jobs of other threads do not count). A
+    * sentinel job run after the body reaches the listener after every
+    * earlier event, so its start marks the count as final.
+    */
+  def jobsIn(group: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val sentinel = s"$group-sentinel"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the sentinel job")
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }

@@ -221,4 +221,54 @@ class AnnIndexSpec extends SparkTestBase {
     AnnIndex.compact(spark, path) // no tombstones: clean no-op
     assert(AnnIndex.topK(spark, path, q, k = 5, nprobe = 8).count() > 0)
   }
+
+  /** topK against `path` equals topKWithModels over models loaded
+    * afresh from the model stores, bypassing the memoized load.
+    */
+  private def assertServesFreshModels(path: String): Unit = {
+    val cents = Models.loadCentroids(spark, s"$path/_models/centroids")
+    val books = Models.loadCodebooks(spark, s"$path/_models/codebooks")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"query_id", $"vec_id", $"sim", $"rk")
+        .collect().map(_.toSeq).toSet
+    val served = rows(AnnIndex.topK(spark, path, q, k = 5, nprobe = 3))
+    assert(served.nonEmpty)
+    assert(served == rows(AnnIndex.topKWithModels(spark, path, q, k = 5,
+      cents, books, nprobe = 3)))
+  }
+
+  test("memoized models follow the stores: after compact, and after a " +
+      "re-write at the same path with new models, topK serves the " +
+      "models on disk") {
+    val path = tmp()
+    val (cents1, _) = AnnIndex.write(emb, path, nlist = 8, coarseIters = 1,
+      m = 8, codewords = 16, pqIters = 1)
+    assertServesFreshModels(path)
+    AnnIndex.delete(emb.filter($"vec_id" % 3 === 0).select($"vec_id"), path)
+    AnnIndex.compact(spark, path)
+    assertServesFreshModels(path)
+    val (cents2, _) = AnnIndex.write(emb, path, nlist = 4, coarseIters = 2,
+      m = 4, codewords = 8, pqIters = 2)
+    assert(cents2.length != cents1.length)
+    assertServesFreshModels(path)
+    assert(AnnIndex.loadModels(spark, path)._1.length == cents2.length)
+  }
+
+  test("one topK call runs a bounded number of Spark jobs: models are " +
+      "driver reads, the probe set one collect") {
+    val path = tmp()
+    AnnIndex.write(emb, path, nlist = 8, coarseIters = 1,
+      m = 8, codewords = 16, pqIters = 1)
+    val first = jobsIn("annidx-first") {
+      AnnIndex.topK(spark, path, q, k = 5, nprobe = 3).collect() }
+    val repeat = jobsIn("annidx-repeat") {
+      AnnIndex.topK(spark, path, q, k = 5, nprobe = 3).collect() }
+    // measured on local[4]: 6 and 4 jobs; 10 and 10 when the two model
+    // stores and the root paid a schema-inference job each, the models
+    // a collect each, and the probe set a distinct shuffle
+    assert(first > 0 && first <= 8, s"first serve ran $first jobs")
+    assert(repeat <= first - 2,
+      s"repeat serve ran $repeat jobs, first $first: the models were " +
+        "read again")
+  }
 }

@@ -304,4 +304,71 @@ class Bm25IndexSpec extends SparkTestBase {
         Seq(("a", "vector")).toDF("query_id", "text"))
     }
   }
+
+  test("one topK call runs a bounded number of Spark jobs: params and " +
+      "stats are driver reads, the query terms one collect") {
+    val path = tmp()
+    Bm25Index.write(docs, path, nBuckets = 16)
+    // the first serve after a write reads params and stats; a repeat
+    // serve of the unchanged index reads neither
+    val first = jobsIn("bm25idx-first") {
+      Bm25Index.topK(spark, path, queries, k = 7).collect() }
+    val repeat = jobsIn("bm25idx-repeat") {
+      Bm25Index.topK(spark, path, queries, k = 7).collect() }
+    // measured on local[4]: 14 and 12 jobs; 25 and 25 when params,
+    // stats and the postings paid a schema-inference job each, params
+    // a head job, and the stats a dedupe/aggregate/broadcast chain
+    assert(first > 0 && first <= 18, s"first serve ran $first jobs")
+    assert(repeat <= first - 2,
+      s"repeat serve ran $repeat jobs, first $first: params and stats " +
+        "were read again")
+  }
+
+  test("a re-write at the same path with another bucket count serves " +
+      "from the new buckets") {
+    val path = tmp()
+    Bm25Index.write(docs, path, nBuckets = 16)
+    assert(Bm25Index.topK(spark, path, queries, k = 7).count() > 0)
+    Bm25Index.write(docs, path, nBuckets = 5)
+    val served = Bm25Index.topK(spark, path, queries, k = 7).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(4)))
+      .toSet
+    val direct = Bm25.topKBatch(docs, queries, k = 7).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(4)))
+      .toSet
+    assert(served.nonEmpty && served == direct)
+  }
+
+  test("the query-term collect is bounded: a batch above the bound " +
+      "fails at once and names it") {
+    val path = tmp()
+    Bm25Index.write(docs.limit(20), path, nBuckets = 4)
+    val perQuery = 1000
+    val n = Bm25Index.MaxQueryTermRows / perQuery + 1
+    val big = spark.range(n).select($"id".as("query_id"),
+      array_join(array_repeat(lit("w"), perQuery), " ").as("text"))
+    val err = intercept[IllegalArgumentException] {
+      Bm25Index.scores(spark, path, big)
+    }
+    assert(err.getMessage.contains(s"${Bm25Index.MaxQueryTermRows}"))
+    // at the bound itself the batch serves
+    val atBound = spark.range(n - 1).select($"id".as("query_id"),
+      array_join(array_repeat(lit("w"), perQuery), " ").as("text"))
+    Bm25Index.scores(spark, path, atBound).count()
+  }
+
+  test("contribs: literal (n, avgdl) give bit-identical contributions " +
+      "to the stats-frame form") {
+    val terms = Seq("vector", "window", "merge", "stream").toDF("term")
+    val tf = Bm25.corpusTf(docs, terms, "doc_id", "text")
+    val stats = Bm25.corpusStats(docs, "text")
+    val st = stats.head()
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.select($"id", $"term", $"contrib").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+    val framed = got(Bm25.contribs(tf, stats, 1.2, 0.75))
+    val literal = got(Bm25.contribs(tf, st.getDouble(0), st.getDouble(1),
+      1.2, 0.75))
+    assert(framed.nonEmpty && literal == framed)
+  }
 }

@@ -740,40 +740,12 @@ class DedupSpec extends SparkTestBase {
   test("jaccardJoinExact / containmentJoinExact: one call and collect " +
       "runs each prefix and candidate stage once (bounded Spark job " +
       "count per job group)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // the suite's CACHED documents: above a cached input AQE reuses no
     // exchange (each cached scan becomes its own table-cache stage), so
     // an unpinned subtree read k times runs k times — the shape of a
     // curation job that caches its exact-dedup survivors
     val input = docs.select($"doc_id", $"text")
     docs.count() // build the cache outside the counted groups
-    val sc = spark.sparkContext
-    // counts the jobs started under `group`; a sentinel job run after
-    // the body reaches the listener after every earlier event, so its
-    // start marks the count as final
-    def jobsIn(group: String)(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val drained = new java.util.concurrent.CountDownLatch(1)
-      val sentinel = s"$group-sentinel"
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-            case Some(`group`) => jobs.incrementAndGet()
-            case Some(`sentinel`) => drained.countDown()
-            case _ =>
-          }
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, group)
-        try body finally sc.clearJobGroup()
-        sc.setJobGroup(sentinel, sentinel)
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
-          "listener bus did not deliver the sentinel job")
-      } finally sc.removeSparkListener(listener)
-      jobs.get
-    }
     val jac = jobsIn("dedupspec-jaccard") {
       Dedup.jaccardJoinExact(input).collect() }
     val con = jobsIn("dedupspec-containment") {
