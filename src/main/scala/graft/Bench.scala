@@ -52,7 +52,7 @@ object Bench {
     // (a) the full JSON is written to bench_out.json so the artifact
     // is recoverable from the working tree regardless of log capture;
     // (b) the printed line is compact (sorted keys, 4-decimal values,
-    // ~2 KB for 83 queries) with `total` first AND repeated last, so a
+    // ~7.5 KB for 270 queries) with `total` first AND repeated last, so a
     // clip from either end still leaves the headline metric parseable.
     def num(v: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, v)
     val qs = times.toSeq.sortBy(_._1)

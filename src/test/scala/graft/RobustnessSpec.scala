@@ -70,16 +70,6 @@ class RobustnessSpec extends SparkTestBase {
     }
   }
 
-  test("oracleSql keys are a subset of queries keys") {
-    val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(extra.isEmpty, s"oracle entries without queries: $extra")
-  }
-
-  test("every query has an oracle (full hash-checked inventory)") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(missing.isEmpty, s"queries without oracle SQL: $missing")
-  }
-
   test("sampling/dedup additions survive degenerate inputs") {
     val D = graft.llmops.Dedup
     val docs = Tables.documents(spark, sf0001)
