@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expr.{LinkFuncs, UrlFuncs}
@@ -15,9 +15,17 @@ import graft.services.PageFetcher
   *           →(ExtractLinks generator + resolve/classify projection)→ links
   *
   * The next frontier is the reference's "promising links" top-5 per
-  * company (score desc), anti-joined against visited URLs. Frontiers
-  * are `localCheckpoint`ed so lineage stays bounded as depth grows —
-  * the loop works at any depth, not just the reference's 2.
+  * company (score desc), anti-joined against visited URLs. Each depth's
+  * `links` and each next frontier are `localCheckpoint`ed: no page is
+  * fetched twice, and lineage stays bounded as depth grows — the loop
+  * works at any depth, not just the reference's 2. The seed frontier
+  * is not checkpointed (it is the caller's small seed relation, fetched
+  * once, by the depth-0 links checkpoint), and neither is the visited
+  * set: it is only the anti-join side of the next frontier, a lazy
+  * union of the seed frontier and the checkpointed frontiers. The loop
+  * stops on an empty frontier without a probe job: the frontier's
+  * checkpoint carries an [[org.apache.spark.sql.Observation]] row
+  * count, read on the driver once the checkpoint has run.
   *
   * Cheap filters (excluded domains, visited anti-join, internal-only)
   * run BEFORE the expensive fetch — the manual predicate-pushdown the
@@ -155,8 +163,6 @@ object Crawl {
                          canonicalizeVisited: Boolean,
                          robots: Option[DataFrame],
                          robotsAgent: String): DataFrame = {
-    import spark.implicits._
-
     def visitKey(url: org.apache.spark.sql.Column) =
       if (canonicalizeVisited) UrlFuncs.canonical_url(url) else url
 
@@ -180,37 +186,29 @@ object Crawl {
 
     var frontier = politeness(
         seeds.select(col("company"), col("url")).withColumn("depth", lit(0)))
-      .localCheckpoint()
     var visited = frontier
       .select(col("company"), visitKey(col("url")).as("url"))
-      .localCheckpoint()
+    // the seed frontier's size is not known without a job; depth 0
+    // fetches whatever it holds, and an empty one yields no links
+    var frontierNonEmpty = true
     var allLinks: DataFrame = null
 
     var depth = 0
-    while (depth <= maxDepth && frontier.limit(1).count() > 0) {
-      val pages = pageSource(spark, frontier)
-
-      val links = pages
-        .select(col("company"), col("url").as("source_url"), col("depth"),
-          HtmlFuncs.extract_links(col("html")).as(Seq("href", "text", "title", "full_html")))
-        .withColumn("href", UrlFuncs.resolve_url(col("href"), col("source_url")))
-        .filter(col("href").isNotNull)
-        .withColumn("link_type", LinkFuncs.classifyLink(col("href"), col("source_url")))
-        .withColumn("file_extension", LinkFuncs.extension(col("href")))
-        .withColumn("document_type", LinkFuncs.documentType(col("file_extension")))
-        .dropDuplicates("company", "href")
-        .localCheckpoint()
+    while (depth <= maxDepth && frontierNonEmpty) {
+      val links = linksOf(pageSource(spark, frontier)).localCheckpoint()
 
       allLinks = if (allLinks == null) links
                  else allLinks.unionByName(links).dropDuplicates("company", "href")
 
       if (depth < maxDepth && (depth == 0 || promisingAtAllDepths)) {
         // promising-links frontier: internal, unexcluded, scored, top-K
-        // per company (W1), minus already-visited (D2)
+        // per company (W1), minus already-visited (D2), robots-gated
+        // before the checkpoint so its observed size is what is fetched
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("company"))
           .orderBy(col("score").desc, col("href"))
-        val next = links
+        val nextSize = Observation()
+        val next = politeness(links
           .filter(col("link_type") === "internal")
           .filter(!LinkFuncs.isExcludedDomain(col("href")))
           .withColumn("score", LinkFuncs.quarterlyScore(
@@ -228,21 +226,37 @@ object Crawl {
           // default path skips the extra dedup shuffle)
           .transform(df => if (canonicalizeVisited)
             df.dropDuplicates("company", "__vkey") else df)
-          .withColumn("depth", lit(depth + 1))
+          .withColumn("depth", lit(depth + 1)))
+          .observe(nextSize, count(lit(1)).as("n"))
           .localCheckpoint()
+        frontierNonEmpty = nextSize.get("n").asInstanceOf[Long] > 0
         visited = visited.unionByName(
-            next.select(col("company"), col("__vkey").as("url")))
-          .localCheckpoint()
-        frontier = politeness(next.drop("__vkey"))
+          next.select(col("company"), col("__vkey").as("url")))
+        frontier = next.drop("__vkey")
       } else {
-        frontier = seeds.select(col("company"), col("url"))
-          .withColumn("depth", lit(0)).limit(0)
+        frontierNonEmpty = false
       }
       depth += 1
     }
 
-    if (allLinks == null) seeds.sparkSession.emptyDataFrame else allLinks
+    // maxDepth < 0 fetches nothing: still the links schema, no rows
+    if (allLinks == null) linksOf(pageSource(spark, frontier.limit(0)))
+    else allLinks
   }
+
+  /** pages (company, url, depth, html) → one row per (company, href):
+    * the ExtractLinks generator plus the resolve/classify projection.
+    */
+  private def linksOf(pages: DataFrame): DataFrame =
+    pages
+      .select(col("company"), col("url").as("source_url"), col("depth"),
+        HtmlFuncs.extract_links(col("html")).as(Seq("href", "text", "title", "full_html")))
+      .withColumn("href", UrlFuncs.resolve_url(col("href"), col("source_url")))
+      .filter(col("href").isNotNull)
+      .withColumn("link_type", LinkFuncs.classifyLink(col("href"), col("source_url")))
+      .withColumn("file_extension", LinkFuncs.extension(col("href")))
+      .withColumn("document_type", LinkFuncs.documentType(col("file_extension")))
+      .dropDuplicates("company", "href")
 
   /** Crawl counters (SURVEY A7): per-company pages visited and document
     * links found.

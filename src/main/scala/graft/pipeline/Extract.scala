@@ -43,40 +43,34 @@ object Extract {
   def latestQuarterReports(links: DataFrame, maxYear: Int,
                            minYear: Int = 2023): DataFrame = {
     val hasCompany = links.columns.contains("company")
-    val keyCols = if (hasCompany) Seq(col("company")) else Seq(lit(1).as("g"))
-
-    val docs = docsWithYearQuarter(links, maxYear)
-      // P6: old-PDF filter — known-old PDFs never qualify
-      .filter(!(col("file_extension") === "pdf" &&
-        col("year").isNotNull && col("year") < minYear))
 
     // A2: latest_year = max known year; latest_quarter = max known
     // quarter *within* that year, defaulting to 4 when no link in the
     // max year carries a quarter (reference :400-425). The struct-max
-    // with null-quarter→-1 computes both in one aggregation: the max
-    // struct is (maxYear, maxQuarterWithinMaxYear | -1).
-    val latest = docs
-      .filter(col("year").isNotNull)
-      .groupBy(keyCols: _*)
-      .agg(max(struct(col("year"),
-        coalesce(col("quarter"), lit(-1)).as("quarter"))).as("latest"))
-      .select(keyCols.map(c => c) :+
-        col("latest.year").as("latest_year") :+
-        when(col("latest.quarter") === -1, 4)
-          .otherwise(col("latest.quarter")).as("latest_quarter"): _*)
-
-    // left join so a corpus with no dated links still flows through
-    // (latest_* null → null-permissive acceptance admits everything)
-    val joined =
-      if (hasCompany) docs.join(broadcast(latest), Seq("company"), "left")
-      else docs.withColumn("g", lit(1))
-        .join(broadcast(latest), Seq("g"), "left").drop("g")
+    // with null-quarter→-1 computes both in one pass: the max struct is
+    // (maxYear, maxQuarterWithinMaxYear | -1). It is a window (per
+    // company, or one group without a company column), so the parsed
+    // docs are computed once and need no join back; undated docs
+    // contribute a null, which max skips, and a group with no dated
+    // doc gets a null latest (null-permissive acceptance below).
+    val group = org.apache.spark.sql.expressions.Window.partitionBy(
+      if (hasCompany) col("company") else lit(1))
+    val latest = max(when(col("year").isNotNull, struct(col("year"),
+      coalesce(col("quarter"), lit(-1)).as("quarter")))).over(group)
+    val docs = docsWithYearQuarter(links, maxYear)
+      // P6: old-PDF filter — known-old PDFs never qualify
+      .filter(!(col("file_extension") === "pdf" &&
+        col("year").isNotNull && col("year") < minYear))
+      .withColumn("latest", latest)
+      .withColumn("latest_year", col("latest.year"))
+      .withColumn("latest_quarter",
+        when(col("latest.quarter") === -1, 4).otherwise(col("latest.quarter")))
 
     // W4: acceptance with null-permissive rules — unknown year passes;
     // within the latest year an unknown quarter passes (reference
     // :373-398); older years/quarters are dropped. latest_year null
     // (no dated links at all) → everything passes.
-    joined
+    docs
       .filter(col("latest_year").isNull || col("year").isNull ||
         (col("year") === col("latest_year") &&
           (col("quarter").isNull || col("quarter") >= col("latest_quarter"))) ||

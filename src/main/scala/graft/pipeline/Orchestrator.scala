@@ -7,10 +7,13 @@ import graft.services.{Clock, Downloader, FileResult, PageFetcher, SystemClock}
 
 /** End-to-end pipeline (reference src/orchestrator.py:54-243) as one
   * Dataset program: crawl → extract → enrich → download → metadata.
-  * The reference's thread-pool fan-out becomes task parallelism over a
-  * companies DataFrame repartitioned to the worker budget; the
-  * inter-stage files-on-disk handoff becomes plain DataFrame lineage
-  * (the "shuffle as filesystem" anti-pattern disappears).
+  * The reference's thread-pool fan-out becomes task parallelism: the
+  * selected reports are hash-partitioned by company into the session's
+  * `defaultParallelism` before the download stage, so downloads run
+  * in that many tasks. The inter-stage files-on-disk handoff becomes
+  * DataFrame lineage cut at each stage boundary by an eager
+  * `localCheckpoint` (the "shuffle as filesystem" anti-pattern
+  * disappears).
   */
 object Orchestrator {
 
@@ -133,10 +136,12 @@ object Orchestrator {
         secsBetween(col("pipeline_start_time"), col("pipeline_end_time")))
   }
 
-  /** Full pipeline over fixture-backed services. Each stage is
-    * materialized (cache + count) at a stage boundary so the injected
-    * clock can stamp real start/end times, mirroring the reference's
-    * sequential stage updates while keeping each stage distributed.
+  /** Full pipeline over fixture-backed services. Each stage ends in an
+    * eager `localCheckpoint`, so the injected clock stamps real start
+    * and end times, mirroring the reference's sequential stage updates
+    * while keeping each stage distributed. A checkpointed block is never
+    * recomputed, so each page is fetched and each report downloaded
+    * once, and nothing is left in the session's cache manager.
     */
   def run(spark: SparkSession, companies: DataFrame, fetcher: PageFetcher,
           downloader: Downloader, destRoot: String, maxYear: Int,
@@ -144,17 +149,17 @@ object Orchestrator {
     val pipelineStart = clock.nowIso()
     val seeds = companies.select(col("company"), col("ir_url").as("url"))
     val scrapingStart = clock.nowIso()
-    val links = Crawl.crawl(spark, seeds, fetcher).cache()
-    links.count()
+    val links = Crawl.crawl(spark, seeds, fetcher).localCheckpoint()
     val scrapingEnd = clock.nowIso()
     val stats = Crawl.crawlStats(links)
     val extractionStart = clock.nowIso()
     val reports = Extract.latestQuarterReports(
-      links.withColumnRenamed("href", "url"), maxYear).cache()
-    reports.count()
+        links.withColumnRenamed("href", "url"), maxYear)
+      .repartition(spark.sparkContext.defaultParallelism, col("company"))
+      .localCheckpoint()
     val extractionEnd = clock.nowIso()
-    val downloads = download(spark, reports, downloader, destRoot, clock).cache()
-    downloads.count()
+    val downloads = download(spark, reports, downloader, destRoot, clock)
+      .localCheckpoint()
     val pipelineEnd = clock.nowIso()
     metadata(companies, stats, downloads, modelUsed = "rule-based",
       times = Some(StageTimes(pipelineStart, scrapingStart, scrapingEnd,

@@ -1150,8 +1150,12 @@ object Q101to150 {
     Query("q127_warc_cdx", (s, d) => {
       import s.implicits._
       val W = graft.io.Warc
-      val dir = java.nio.file.Files.createTempDirectory("graft_cdx_q127")
-        .toFile.getAbsolutePath
+      // shards of the previous call are cleared, not accumulated
+      val dir = s"$scratch/q127_warc_cdx"
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+        s.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
       t(s, d, "documents")
         .filter($"doc_id" % 4 === 1)
         .select($"doc_id", $"source", $"text")

@@ -157,6 +157,49 @@ class CrawlSpec extends SparkTestBase {
       MapPageFetcher(pages), maxDepth = 2, topK = 5,
       robots = Some(denyAll))
     assert(blocked.count() == 0)
+    assert(blocked.columns.toSeq == links.columns.toSeq)
+  }
+
+  test("empty seeds: the links schema with no rows, and crawlStats runs") {
+    val none = Crawl.crawl(spark,
+      Seq.empty[(String, String)].toDF("company", "url"),
+      MapPageFetcher(pages), maxDepth = 2, topK = 5)
+    assert(none.columns.toSeq == links.columns.toSeq)
+    assert(none.count() == 0)
+    assert(Crawl.crawlStats(none).count() == 0)
+    // no depth at all still types its (empty) result
+    val noDepth = Crawl.crawl(spark,
+      Seq(("corp", s"$base/index.html")).toDF("company", "url"),
+      MapPageFetcher(pages), maxDepth = -1)
+    assert(noDepth.columns.toSeq == links.columns.toSeq)
+    assert(noDepth.count() == 0)
+  }
+
+  test("no promising link at depth 0: no depth-1 fetch, no probe job") {
+    // the seed links one document and one external page: the next
+    // frontier is empty, which the frontier checkpoint's observed size
+    // reports, so the loop stops without fetching or probing again
+    val leaf = Map(s"$base/index.html" ->
+      """<html><body>
+        |<a href="/docs/annual-report-2024.pdf">Annual Report</a>
+        |<a href="https://other.com/quarterly-earnings">Quarterly earnings</a>
+        |</body></html>""".stripMargin)
+    CountingFetcher.calls.set(0)
+    var got: Array[String] = null
+    val jobs = jobsIn("crawlspec-leaf") {
+      got = Crawl.crawl(spark,
+        Seq(("corp", s"$base/index.html")).toDF("company", "url"),
+        CountingFetcher(leaf), maxDepth = 2, topK = 5)
+        .select($"href").as[String].collect()
+    }
+    assert(got.toSet == Set(s"$base/docs/annual-report-2024.pdf",
+      "https://other.com/quarterly-earnings"))
+    assert(CountingFetcher.calls.get == 1) // the seed page only
+    // depth 0's links checkpoint (its dedupe exchange, then the
+    // checkpoint), the next frontier's checkpoint (the top-K window's
+    // exchange, the visited side of the anti-join, then the checkpoint)
+    // and the final collect: no emptiness probe, no depth-1 links job
+    assert(jobs == 6, s"$jobs jobs")
   }
 
   test("crawlStats matches reference counter semantics") {
@@ -207,4 +250,19 @@ class CrawlSpec extends SparkTestBase {
     assert(replayed.filter($"href".contains("/late")).count() == 0)
     assert(replayed.filter($"source_url" === s"$base/gone").count() == 0)
   }
+}
+
+/** A fixture fetcher that counts its calls in one JVM-wide counter (the
+  * tasks of a `local` session run in the test's JVM).
+  */
+final case class CountingFetcher(pages: Map[String, String])
+    extends graft.services.PageFetcher {
+  override def fetch(url: String): Option[String] = {
+    CountingFetcher.calls.incrementAndGet()
+    pages.get(url)
+  }
+}
+
+object CountingFetcher {
+  val calls = new java.util.concurrent.atomic.AtomicInteger
 }

@@ -62,4 +62,56 @@ class ExtractEdgeSpec extends SparkTestBase {
     assert(out.select($"company", $"url").as[(String, String)].collect().toSet ==
       Set(("a", "https://x/a1.pdf"), ("b", "https://x/b1.pdf")))
   }
+
+  test("selection equals a driver-side replay of the A2/W4/P6 rules") {
+    // generated links: dated, quarter-less, undated and old documents
+    // for several companies, plus non-document rows that never qualify
+    val rnd = new scala.util.Random(7)
+    val rows = for {
+      c <- Seq("a", "b", "c", "d", "e")
+      i <- 0 until 12
+    } yield {
+      val y = 2019 + rnd.nextInt(8)
+      val text = rnd.nextInt(4) match {
+        case 0 => s"Q${1 + rnd.nextInt(4)} $y earnings"
+        case 1 => s"Annual report $y"
+        case 2 => "whitepaper"
+        case _ => s"Q${1 + rnd.nextInt(4)} $y results"
+      }
+      val ext = if (rnd.nextInt(3) == 0) "html" else "pdf"
+      val kind = if (rnd.nextInt(6) == 0) "internal" else "document"
+      (c, s"https://x/$c/$i.$ext", text, ext, kind)
+    }
+    val df = rows.toDF("company", "url", "text", "file_extension", "link_type")
+      .withColumn("title", lit("")).withColumn("full_html", lit(""))
+      .withColumn("source_url", lit("")).withColumn("document_type", lit("doc"))
+    val (maxYear, minYear) = (2026, 2023)
+    val got = Extract.latestQuarterReports(df, maxYear, minYear)
+      .select($"company", $"url", $"year", $"quarter")
+      .as[(String, String, Int, Int)].collect().toSet
+
+    // the parsed (year, quarter) per document, then the rules in Scala
+    val parsed = Extract.docsWithYearQuarter(df, maxYear)
+      .select($"company", $"url", $"file_extension", $"year", $"quarter")
+      .as[(String, String, String, Option[Int], Option[Int])].collect()
+      .filterNot { case (_, _, ext, y, _) => ext == "pdf" && y.exists(_ < minYear) }
+    val want = parsed.groupBy(_._1).toSeq.flatMap { case (_, docs) =>
+      val latest = docs.collect { case (_, _, _, Some(y), q) => (y, q.getOrElse(-1)) }
+        .maxOption.map { case (y, q) => (y, if (q == -1) 4 else q) }
+      docs.filter { case (_, _, _, y, q) =>
+        latest.isEmpty || y.isEmpty || y.get > latest.get._1 ||
+          (y.get == latest.get._1 && q.forall(_ >= latest.get._2))
+      }.map { case (c, u, _, y, q) =>
+        (c, u, y.orElse(latest.map(_._1)).getOrElse(maxYear),
+          q.orElse(latest.map(_._2)).getOrElse(4))
+      }
+    }.toSet
+    assert(want.nonEmpty && want.size < parsed.length) // the rules select
+    assert(got == want)
+    // without a company column the whole input is one group
+    val one = Extract.latestQuarterReports(
+        df.filter($"company" === "a").drop("company"), maxYear, minYear)
+      .select($"url", $"year", $"quarter").as[(String, Int, Int)].collect().toSet
+    assert(one == want.collect { case ("a", u, y, q) => (u, y, q) })
+  }
 }

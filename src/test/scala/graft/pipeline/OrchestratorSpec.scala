@@ -29,12 +29,18 @@ class OrchestratorSpec extends SparkTestBase {
       .toDF("company", "ticker", "ir_url")
     val clock = new graft.services.FixedClock(
       java.time.Instant.parse("2026-02-01T00:00:00Z").toEpochMilli, 1000L)
-    val meta = Orchestrator.run(spark, companies, MapPageFetcher(pages),
-      new LocalFileDownloader, work.resolve("out").toString, maxYear = 2026,
-      clock = clock)
-      .cache()
-
-    val row = meta.head()
+    var rows: Array[org.apache.spark.sql.Row] = null
+    val jobs = jobsIn("orchestrator-run") {
+      rows = Orchestrator.run(spark, companies, MapPageFetcher(pages),
+        new LocalFileDownloader, work.resolve("out").toString, maxYear = 2026,
+        clock = clock).collect()
+    }
+    // the crawl (depth 0's links, the empty next frontier, the stage's
+    // links), extract, download and the metadata collect: no frontier
+    // probe, and no stage is planned twice
+    assert(jobs == 16, s"$jobs jobs")
+    assert(rows.length == 1)
+    val row = rows.head
     // stage boundaries stamped by the injected clock, in pipeline order
     val stampCols = Seq("pipeline_start_time", "scraping_start_time",
       "scraping_end_time", "extraction_start_time", "extraction_end_time",
@@ -60,6 +66,29 @@ class OrchestratorSpec extends SparkTestBase {
     // downloaded bytes really landed with sanitized names
     val outDir = work.resolve("out/corp").toFile
     assert(outDir.isDirectory && outDir.listFiles().length == 2)
+  }
+
+  test("no companies: no metadata rows, no error") {
+    val none = Seq.empty[(String, String, String)]
+      .toDF("company", "ticker", "ir_url")
+    val work = Files.createTempDirectory("graft-e2e-empty")
+    val meta = Orchestrator.run(spark, none, MapPageFetcher(Map.empty),
+      new LocalFileDownloader, work.resolve("out").toString, maxYear = 2026)
+    assert(meta.collect().isEmpty)
+  }
+
+  test("runs leave no cached stages behind") {
+    spark.catalog.clearCache()
+    val work = Files.createTempDirectory("graft-e2e-cache")
+    val page = "https://ir.corp.com/index.html"
+    val companies = Seq(("corp", "MMM", page)).toDF("company", "ticker", "ir_url")
+    val fetcher = MapPageFetcher(Map(page ->
+      s"""<html><body><a href="file:${work.resolve("q2-2025.pdf")}">Q2 2025</a></body></html>"""))
+    (1 to 3).foreach { i =>
+      Orchestrator.run(spark, companies, fetcher, new LocalFileDownloader,
+        work.resolve(s"out$i").toString, maxYear = 2026).collect()
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("download computes streamed md5 identical to whole-file digest") {
