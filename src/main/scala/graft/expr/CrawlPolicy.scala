@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.{coalesce, lit}
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -286,7 +287,7 @@ object SitemapKernels {
   * codegen scalar. Standard null-in/null-out (a null operand yields
   * null); the fail-open rule for a MISSING robots file (RFC 9309
   * §2.3.1.4) composes as `coalesce(robots_allowed(r, a, u), true)` —
-  * see [[graft.Graft.robotsAllowed]].
+  * see [[CrawlPolicyFuncs.robots_allowed_fail_open]].
   */
 case class RobotsAllowed(first: Expression, second: Expression,
                          third: Expression) extends TernaryExpression {
@@ -392,6 +393,11 @@ object CrawlPolicyFuncs {
   def robots_allowed(robots: Column, agent: Column, url: Column): Column =
     ColumnBridge.column(RobotsAllowed(ColumnBridge.expression(robots),
       ColumnBridge.expression(agent), ColumnBridge.expression(url)))
+  /** RFC 9309 verdict, failing OPEN on a null/missing robots file
+    * (§2.3.1.4's unreachable-robots rule): the crawl frontier's gate. */
+  def robots_allowed_fail_open(robots: Column, agent: Column,
+                               url: Column): Column =
+    coalesce(robots_allowed(robots, agent, url), lit(true))
   def robots_sitemaps(robots: Column): Column =
     ColumnBridge.column(RobotsSitemaps(ColumnBridge.expression(robots)))
   def robots_crawl_delay(robots: Column, agent: Column): Column =

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * the reference pipeline's user-facing surface always had one entry
   * point per task (one scraper call, one extract call — cf.
   * /root/reference/src/main.py:24-63), so the engine gets one here:
-  * `Graft.dedupPlan(docs)` returns a [[DedupTierPlan]] whose fields
+  * `DedupPlan.plan(docs)` returns a [[DedupTierPlan]] whose fields
   * are the evidence and whose `recommendedTier`/`reason` are the
   * verdict.
   *

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.expr.{LinkFuncs, UrlFuncs}
+import graft.expr.{CrawlPolicyFuncs, LinkFuncs, UrlFuncs}
 import graft.html.HtmlFuncs
 import graft.services.PageFetcher
 
@@ -60,6 +60,16 @@ object Crawl {
     *   frontier. Hosts absent from the table fail OPEN (RFC 9309
     *   §2.3.1.4's unreachable-robots rule). `None` (default) is
     *   reference fidelity: the scraper never consults robots.txt.
+    *
+    * PRODUCTION SEAM — JS rendering: the shipped
+    * [[graft.services.HttpPageFetcher]] fetches raw HTTP bytes; the
+    * reference renders pages in a real browser, so JS-shell IR sites
+    * (most of them) yield far fewer links through the raw fetcher.
+    * [[PageFetcher]] is the one-method seam: wrap a headless browser
+    * (one per executor, `transient lazy val`) and pass it here — every
+    * downstream operator is fetcher-agnostic. See README "Production
+    * backends" for the recipe; CrawlSpec's archive-replay identity
+    * shows the contract any impl must meet.
     */
   def crawl(spark: SparkSession, seeds: DataFrame, fetcher: PageFetcher,
             maxDepth: Int = 2, topK: Int = 5,
@@ -177,10 +187,8 @@ object Crawl {
             broadcast(r.select(lower(col("host")).as("__host"),
               col("robots_txt").as("__robots"))),
             Seq("__host"), "left")
-          .filter(coalesce(
-            graft.expr.CrawlPolicyFuncs.robots_allowed(
-              col("__robots"), lit(robotsAgent), col("url")),
-            lit(true)))
+          .filter(CrawlPolicyFuncs.robots_allowed_fail_open(
+            col("__robots"), lit(robotsAgent), col("url")))
           .drop("__host", "__robots")
     }
 

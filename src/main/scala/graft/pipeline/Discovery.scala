@@ -62,7 +62,11 @@ object Discovery {
   final case class Scored(ticker: String, company: String, website: String,
                           ir_url: String, priority: Int, score: Int)
 
-  /** @param companies DataFrame(ticker, company, website)
+  /** IR-page discovery scoring (SURVEY A5/P15); same JS-rendering
+    * seam as [[Crawl.crawl]] — pass a rendering [[PageFetcher]] for
+    * JS-shell sites.
+    *
+    * @param companies DataFrame(ticker, company, website)
     * @return DataFrame(ticker, company, website, ir_url, status) — one
     *         row per input company, status ∈ {Found, Not Found}.
     */

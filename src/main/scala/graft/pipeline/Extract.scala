@@ -37,7 +37,18 @@ object Extract {
       .drop("yq")
   }
 
-  /** @param links DocumentLink rows, optionally with a `company` column
+  /** Latest-quarter report pick (SURVEY U5→A2→W4), the relational
+    * twin of the reference's LLM extraction step.
+    *
+    * PRODUCTION SEAM — LLM extraction: the reference prompts an LLM
+    * for this answer; the engine's [[graft.services.StructuredExtractor]]
+    * trait is the drop-in point for that backend (same
+    * `Seq[DocumentLink] => Seq[Report]` shape, `Report` as the
+    * response schema), while [[graft.services.RuleBasedExtractor]] is
+    * the deterministic impl this relational query cross-checks. See
+    * README "Production backends".
+    *
+    * @param links DocumentLink rows, optionally with a `company` column
     *              (per-company latest computed when present).
     */
   def latestQuarterReports(links: DataFrame, maxYear: Int,

@@ -74,16 +74,16 @@ object Orchestrator {
       pipelineStart: String, scrapingStart: String, scrapingEnd: String,
       extractionStart: String, extractionEnd: String, pipelineEnd: String)
 
-  /** A10: per-company nested metadata document — `collect_list(struct)`
-    * replaces the reference's mutable collector object
-    * (src/simple_metadata_collector.py:36-130).
-    */
   private val isoFmt = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
 
   private def secsBetween(start: Column, end: Column): Column =
     (unix_millis(to_timestamp(end, isoFmt)) -
       unix_millis(to_timestamp(start, isoFmt))) / 1000.0
 
+  /** A10: per-company nested metadata document — `collect_list(struct)`
+    * replaces the reference's mutable collector object
+    * (src/simple_metadata_collector.py:36-130).
+    */
   def metadata(companies: DataFrame, stats: DataFrame,
                downloads: DataFrame, modelUsed: String,
                times: Option[StageTimes] = None): DataFrame = {

@@ -1064,6 +1064,7 @@ object Q101to150 {
     // wildcards — every verdict predicted closed-form from doc_id.
     Query("q125_robots_policy", (s, d) => {
       import s.implicits._
+      val P = graft.expr.CrawlPolicyFuncs
       val robots =
         """# graft politeness fixture
           |User-agent: graftbot-images
@@ -1088,10 +1089,10 @@ object Q101to150 {
             .when($"doc_id" % 4 === 2, concat(lit("/docs/r"), $"doc_id", lit(".pdf")))
             .otherwise(concat(lit("/docs/r"), $"doc_id", lit(".html"))))
         .select($"doc_id",
-          Graft.robotsAllowed(lit(robots), lit("graftbot/1.0"),
+          P.robots_allowed_fail_open(lit(robots), lit("graftbot/1.0"),
             concat(lit("https://ex.com"), $"path")).as("allowed"),
-          size(Graft.robotsSitemaps(lit(robots))).as("n_sitemaps"),
-          Graft.robotsCrawlDelay(lit(robots), lit("graftbot/1.0"))
+          size(P.robots_sitemaps(lit(robots))).as("n_sitemaps"),
+          P.robots_crawl_delay(lit(robots), lit("graftbot/1.0"))
             .as("delay_s"))
         .orderBy($"doc_id")
     },
@@ -1118,8 +1119,9 @@ object Q101to150 {
           lit("/p1?a=1&amp;b=2</loc></url>\n" +
             " <url><loc><![CDATA[https://s.ex.com/d"), $"doc_id",
           lit("/p2]]></loc><changefreq>daily</changefreq></url>\n</urlset>")))
-        .select($"doc_id", Graft.extractSitemap($"xml")
-          .as(Seq("kind", "loc", "lastmod", "changefreq", "priority")))
+        .select($"doc_id",
+          graft.expr.CrawlPolicyFuncs.extract_sitemap($"xml")
+            .as(Seq("kind", "loc", "lastmod", "changefreq", "priority")))
         .orderBy($"doc_id", $"loc")
     },
       """WITH e AS (
@@ -1286,7 +1288,7 @@ object Q101to150 {
           lit("First part about "), $"source",
           lit(". Dr. Smith of Acme Inc. spoke! Was it "), $"doc_id",
           lit("? The end.")))
-        .withColumn("sents", Graft.splitSentences($"prose"))
+        .withColumn("sents", graft.llmops.Sentences.sentences($"prose"))
         .select($"doc_id",
           size($"sents").as("n_sent"),
           md5(element_at($"sents", 1)).as("first_md5"),

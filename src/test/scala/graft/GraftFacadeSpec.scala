@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Drives the public facade end-to-end (the "switch to this library"
+/** Drives the public surface end-to-end (the "switch to this library"
   * surface): session bootstrap is exercised implicitly via the shared
-  * session (same config path), delegation via representative calls.
+  * session (same config path); the table sources and the facade's own
+  * compositions through `Graft`, every other operator through its
+  * module object.
   */
 class GraftFacadeSpec extends SparkTestBase {
   import spark.implicits._
@@ -22,22 +24,22 @@ class GraftFacadeSpec extends SparkTestBase {
 
   test("facade: load → dedup → similarity → text analysis round trip") {
     val docs = Graft.documents(spark, sf0001)
-    val deduped = Graft.minhashDedup(docs)
+    val deduped = llmops.Dedup.minhashDedup(docs)
     assert(deduped.count() > 0 && deduped.count() <= docs.count())
 
     val emb = Graft.embeddings(spark, sf0001)
     val q = emb.filter($"vec_id" < 2)
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
-    assert(Graft.cosineTopK(emb, q, k = 3).count() == 6)
+    assert(llmops.VectorFuncs.bruteForceTopK(emb, q, k = 3).count() == 6)
 
     val stats = docs.select(
-      Graft.langId($"text").as("lang"),
-      Graft.tokenCount($"text").as("n"),
-      Graft.qualityScore($"text").as("q")).collect()
+      llmops.TextFuncs.langId($"text").as("lang"),
+      llmops.TextFuncs.tokenCount($"text").as("n"),
+      llmops.TextFuncs.qualityScore($"text").as("q")).collect()
     assert(stats.forall(r => r.getInt(1) >= 0 && r.getDouble(2) >= 0.0))
 
     val resolved = Seq(("a.pdf", "https://h.com/x/")).toDF("h", "b")
-      .select(Graft.resolveUrl($"h", $"b")).as[String].head()
+      .select(graft.expr.UrlFuncs.resolve_url($"h", $"b")).as[String].head()
     assert(resolved == "https://h.com/x/a.pdf")
   }
 
@@ -48,78 +50,80 @@ class GraftFacadeSpec extends SparkTestBase {
     val cd = Graft.clusterDedup(docs)
     assert(cd.count() > 0 && cd.count() <= docs.count())
     // chunks cover the corpus sample
-    assert(Graft.slidingChunks(docs, 32, 16).count() >= docs.count())
+    assert(llmops.Chunking.slidingChunks(docs, 32, 16).count() >= docs.count())
     // profile yields one row per column
-    assert(Graft.profile(docs).count() == 3)
+    assert(ops.Profiling.profile(docs).count() == 3)
     // compression ratio bounded — only meaningful past deflate's ~5-byte
     // framing floor, so restrict to texts long enough that framing can't
     // push the ratio over 1 (a 2-char doc deflates to ~10 bytes = r 5.0)
     val ratios = docs.filter(length($"text") >= 50)
-      .select(Graft.compressionRatio($"text").as("r"))
+      .select(llmops.Compression.compressionRatio($"text").as("r"))
       .filter($"r" <= 0.0 || $"r" > 1.2).count()
     assert(ratios == 0)
     // token budget keeps a subset
-    assert(Graft.tokenBudgetSample(docs, 2000L).count() <= docs.count())
+    assert(llmops.Splits.tokenBudgetSample(docs, 2000L).count() <= docs.count())
     // ngram decontam against itself drops everything
-    assert(Graft.ngramDecontaminate(docs, docs.select($"text")).count() == 0)
+    assert(llmops.Dedup.ngramDecontaminate(docs, docs.select($"text"))
+      .count() == 0)
     // composed cleaning runs end-to-end
-    assert(Graft.cleanCorpus(docs, minQuality = 0.0).count() > 0)
+    assert(llmops.Corpus.clean(docs, minQuality = 0.0,
+      nearDupThreshold = Some(0.7)).count() > 0)
   }
 
   test("facade: round-6 selection/mixing/retrieval delegate correctly") {
     val docs = Graft.documents(spark, sf0001)
       .select($"doc_id", $"lang", $"source", $"text").limit(80).cache()
     // DSIR: fit en-target ratios, select half the corpus
-    val ratios = Graft.dsirRatios(docs.filter($"lang" === "en"), docs)
+    val ratios = llmops.Dsir.logRatios(docs.filter($"lang" === "en"), docs)
     val picked = Graft.dsirSelect(docs, ratios, k = 20)
     assert(picked.count() == 20)
     // quality model: train on heuristic labels, score everything
     val labeled = docs.withColumn("label",
-      (Graft.qualityScore($"text") >= 0.75).cast("int"))
-    val (w, b) = Graft.trainQualityModel(labeled)
-    val probs = Graft.qualityModelScore(docs, w, b)
+      (llmops.TextFuncs.qualityScore($"text") >= 0.75).cast("int"))
+    val (w, b) = llmops.QualityModel.train(labeled)
+    val probs = llmops.QualityModel.score(docs, w, b)
     assert(probs.count() == docs.count())
     // temperature mixing: rates in (0,1], keep column present
-    val mix = Graft.temperatureWeights(docs, alpha = 0.7,
+    val mix = llmops.Mixture.temperatureWeights(docs, alpha = 0.7,
       tokenBudget = 1000L)
     assert(mix.count() > 0)
-    assert(Graft.applyMixture(docs, mix).columns.contains("keep"))
+    assert(llmops.Mixture.applyRates(docs, mix).columns.contains("keep"))
     // per-group bins: every row lands in a bucket 0..2
     val binned = Graft.groupQuantileBins(docs, $"lang",
       length($"text").cast("double"), Seq(1.0 / 3, 2.0 / 3))
     assert(binned.filter($"bin" < 0 || $"bin" > 2).count() == 0)
     // BM25 returns ranked hits for a corpus term
-    assert(Graft.bm25TopK(docs, Seq("spark", "query"), 5).count() <= 5)
+    assert(llmops.Bm25.topK(docs, Seq("spark", "query"), 5).count() <= 5)
     // span removal never grows the corpus
-    assert(Graft.dropDuplicateSpans(docs, n = 8).count() == docs.count())
+    assert(llmops.Dedup.dropDuplicateSpans(docs, n = 8).count() == docs.count())
   }
 
   test("facade: round-7 LM/multimodal/packing delegate correctly") {
     val docs = Graft.documents(spark, sf0001)
       .select($"doc_id", $"lang", $"text").limit(80).cache()
     // KN scoring from a (optionally pruned) bigram table
-    val bi = Graft.bigramCounts(docs, $"text", minCount = 2L)
-    val scored = Graft.knPerplexityScores(docs, bi)
+    val bi = llmops.LangModel.bigramCounts(docs, $"text", minCount = 2L)
+    val scored = llmops.LangModel.knNllScores(docs, bi)
     assert(scored.count() > 0 &&
       scored.filter($"avg_nll" < 0).count() == 0)
     // multimodal: image dHash pairs, audio stats/fingerprints, frames
     val ids = docs.select($"doc_id")
-    val ih = Graft.imageDHashes(spark,
+    val ih = llmops.Multimodal.imageDHashes(spark,
       llmops.Multimodal.plantedHashImages(spark, ids))
-    assert(Graft.imageNearDupPairs(ih).count() > 0)
+    assert(llmops.Multimodal.imageNearDupPairs(ih).count() > 0)
     val aud = llmops.Audio.plantedAudio(spark, ids)
-    assert(Graft.audioStats(spark, aud)
+    assert(llmops.Audio.decodeAudioStats(spark, aud)
       .filter($"sample_rate" === 8000).count() > 0)
-    val ah = Graft.audioEnergyHashes(spark,
+    val ah = llmops.Audio.audioEnergyHashes(spark,
       llmops.Audio.plantedFingerprintAudio(spark, ids))
-    assert(Graft.audioNearDupPairs(ah).count() > 0)
-    assert(Graft.videoFrameStats(spark,
+    assert(llmops.Audio.audioNearDupPairs(ah).count() > 0)
+    assert(llmops.Multimodal.decodeVideoFrameStats(spark,
       llmops.Multimodal.plantedGifs(spark, ids)).count() > 0)
     // exact packing: fragments tile, stats aggregate
-    val frags = Graft.packSequences(
-      docs.select($"doc_id", Graft.tokenCount($"text").as("n_toks")),
+    val frags = llmops.Packing.packSequences(
+      docs.select($"doc_id", llmops.TextFuncs.tokenCount($"text").as("n_toks")),
       seqLen = 64)
-    assert(Graft.sequenceStats(frags)
+    assert(llmops.Packing.sequenceStats(frags)
       .filter($"n_toks" > 64).count() == 0)
   }
 
@@ -157,5 +161,42 @@ class GraftFacadeSpec extends SparkTestBase {
     val safe = Graft.quoteSafeCorpus(corpus, bench,
       maxQuoteTokens = 15, idCol = "item_id")
     assert(safe.select($"item_id").as[Long].collect().toSeq == Seq(6L))
+  }
+
+  test("facade: exactly the session, the sources and the compositions") {
+    val public = Graft.getClass.getDeclaredMethods.toSeq
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers))
+      .map(_.getName).filterNot(_.contains("$default$")).toSet
+    assert(public == Set("session", "documents", "embeddings", "events",
+      "clusterDedup", "clusterDedupBest", "dsirSelect", "groupQuantileBins",
+      "quoteSafeCorpus"))
+  }
+
+  test("facade: events reads the table with ts as a timestamp") {
+    val ev = Graft.events(spark, sf0001)
+    assert(ev.schema("ts").dataType.typeName.startsWith("timestamp"))
+    assert(ev.count() ==
+      spark.read.parquet(s"$sf0001/events.parquet").count())
+  }
+
+  test("clusterDedupBest keeps the higher-quality copy of a near-dup pair") {
+    val prose = (0 until 60).map(i => s"the report for quarter $i of the year")
+      .mkString(" ")
+    // doc 1 is the noisy copy: the lower id, so a min-id pick keeps it
+    val docs = Seq(
+      (1L, prose + " " + "!" * 400),
+      (2L, prose),
+      (3L, (0 until 80).map(i => s"unrelated w$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    val q = docs.select($"doc_id",
+      llmops.TextFuncs.qualityScore($"text").as("q"))
+      .as[(Long, Double)].collect().toMap
+    assert(q(2L) > q(1L))
+    val kept = Graft.clusterDedupBest(docs)
+    assert(kept.count() <= docs.count())
+    assert(kept.select($"doc_id").as[Long].collect().sorted.toSeq ==
+      Seq(2L, 3L))
+    assert(Graft.clusterDedup(docs).select($"doc_id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 3L))
   }
 }

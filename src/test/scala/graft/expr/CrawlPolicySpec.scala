@@ -153,12 +153,12 @@ class CrawlPolicySpec extends SparkTestBase {
       .as[(Boolean, Int)].collect.toSeq
     assert(sqlGot.map(_._2).forall(_ == 2))
 
-    // null operand → null (fail-open composes via Graft.robotsAllowed)
+    // null operand → null (fail-open composes via robots_allowed_fail_open)
     val nullRow = Seq((Option.empty[String], "u"))
       .toDF("robots", "agent")
       .select(CrawlPolicyFuncs.robots_allowed(
         $"robots", $"agent", lit("https://x.com/a")).as("v"),
-        graft.Graft.robotsAllowed(
+        CrawlPolicyFuncs.robots_allowed_fail_open(
           $"robots", $"agent", lit("https://x.com/a")).as("open"))
       .head
     assert(nullRow.isNullAt(0) && nullRow.getBoolean(1))
@@ -225,7 +225,8 @@ class CrawlPolicySpec extends SparkTestBase {
     val frontier = Seq((robots, sm)).toDF("robots", "sm")
       .select($"robots", CrawlPolicyFuncs.extract_sitemap($"sm")
         .as(Seq("kind", "loc", "lastmod", "changefreq", "priority")))
-      .where(graft.Graft.robotsAllowed($"robots", lit("graftbot"), $"loc"))
+      .where(CrawlPolicyFuncs.robots_allowed_fail_open(
+        $"robots", lit("graftbot"), $"loc"))
       .select($"loc").as[String].collect.toSeq
     assert(frontier == Seq("https://ex.com/docs/b.html"))
   }
