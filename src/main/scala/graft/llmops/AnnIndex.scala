@@ -40,6 +40,7 @@ object AnnIndex {
   def delete(ids: DataFrame, path: String,
              idCol: String = "vec_id"): Unit =
     ids.select(col(idCol).cast("long").as("id")).distinct()
+      .sortWithinPartitions("id") // same ids, same bytes
       .write.mode("append").parquet(s"$path/_tombstones/ids")
 
   /** Physically remove tombstoned vectors: the code rows rewrite
@@ -73,7 +74,10 @@ object AnnIndex {
     Models.saveIvfAdc(spark, s"$bak/_models", cents, books)
     metrics.coalesce(1).write.mode("overwrite")
       .parquet(s"$bak/_stats/metrics")
+    // rows in (list, id) order, not shuffle-fetch order, so a
+    // compaction of the same index writes the same bytes every time
     live.repartition(col("list_id"))
+      .sortWithinPartitions("list_id", corpusId)
       .write.mode("overwrite").partitionBy("list_id").parquet(path)
     Models.saveIvfAdc(spark, s"$path/_models", cents, books)
     metrics.coalesce(1).write.mode("overwrite")
@@ -356,6 +360,7 @@ object AnnIndex {
     // a crash anywhere leaves an unpublished partial dir that the
     // next attempt simply skips past
     live.repartition(col("list_id"))
+      .sortWithinPartitions("list_id", corpusId) // see [[compact]]
       .write.mode("overwrite").partitionBy("list_id").parquet(dst)
     Models.saveIvfAdc(spark, s"$dst/_models", cents, books)
     spark.read.parquet(s"$src/_stats/metrics")

@@ -90,15 +90,18 @@ object Bm25 {
 
   /** [[contribs]] with (n, avgdl) known on the driver: they enter the
     * plan as literals, so it carries no stats stages and no cross
-    * joins. Same expressions, so the same stats values give
-    * bit-identical contributions.
+    * joins. df is `count(*) over (partition by term)` on the same
+    * rows, not an aggregate joined back: tf and df come from one read
+    * of `tf`, and a `tf` already hash-partitioned by `term` runs the
+    * window with no exchange of its own. Same expressions, so the same
+    * stats values give bit-identical contributions.
     */
   private[llmops] def contribs(tf: DataFrame, n: Double, avgdl: Double,
-                               k1: Double, b: Double): DataFrame = {
-    val idf = docFreqs(tf).select(col("term"), idfOf(lit(n)))
-    tf.join(broadcast(idf), Seq("term"))
+                               k1: Double, b: Double): DataFrame =
+    tf.withColumn("df",
+        count(lit(1)).over(Window.partitionBy(col("term"))).cast("double"))
+      .withColumn("idf", idfOf(lit(n)))
       .withColumn("contrib", contribOf(lit(avgdl), k1, b))
-  }
 
   private def docFreqs(tf: DataFrame): DataFrame =
     tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
@@ -113,25 +116,28 @@ object Bm25 {
       (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / avgdl))
 
   /** Shared per-query ranking tail: 4-decimal round → [[CollectTopK]]
-    * bounded heap → dense rk → broadcast metadata join-back. The three
-    * top-k entry points (batch, RM3, index-served) must rank
+    * bounded heap with `n_terms_hit` as its payload → dense rk. The
+    * three top-k entry points (batch, RM3, index-served) must rank
     * IDENTICALLY for the cross-path parity specs to hold — they all
     * call this.
+    *
+    * `scored` is (queryIdCol, idCol, n_terms_hit, score) with one row
+    * per (query, id); the result is (queryIdCol, rk, idCol,
+    * n_terms_hit, score), idCol in its scored type, score rounded. The
+    * heap carries `n_terms_hit`, so `scored` is read once: no join
+    * back onto it, and no rank window over it.
     */
   private[llmops] def rankTail(scored: DataFrame, k: Int,
                                queryIdCol: String, idCol: String)
-      : DataFrame = {
-    val sc = scored.withColumn("score", round(col("score"), 4))
-    val top = sc
+      : DataFrame =
+    scored
       .groupBy(col(queryIdCol))
-      .agg(TopK.topK(col(idCol).cast("long"), col("score"), k))
+      .agg(TopK.topK(col(idCol), round(col("score"), 4),
+        col("n_terms_hit"), k))
       .select(col(queryIdCol), posexplode(col("topk")))
       .select(col(queryIdCol), (col("pos") + 1).cast("int").as("rk"),
-        col("col._1").as(idCol))
-    sc.join(broadcast(top), Seq(queryIdCol, idCol))
-      .select(col(queryIdCol), col("rk"), col(idCol),
-        col("n_terms_hit"), col("score"))
-  }
+        col("col._1").cast(scored.schema(idCol).dataType).as(idCol),
+        col("col._3").as("n_terms_hit"), col("col._2").as("score"))
 
   /** BM25 scores of every document matching ≥1 query term:
     * (id, n_terms_hit, score). `terms` is the analyzed query (it is

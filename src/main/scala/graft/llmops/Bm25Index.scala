@@ -202,6 +202,7 @@ object Bm25Index {
           .withColumn("term_bucket",
             pmod(xxhash64(col("term")), lit(nBuckets)))
           .repartition(col("term_bucket"))
+          .sortWithinPartitions("term_bucket", "term", "id") // see [[compact]]
           .write.mode("append").partitionBy("term_bucket")
           .parquet(s"$path/postings")
         None
@@ -237,6 +238,7 @@ object Bm25Index {
       s"$path has no doclens store (written before deletion support); " +
         "rebuild with Bm25Index.write before deleting")
     ids.select(col(idCol).cast("long").as("id")).distinct()
+      .sortWithinPartitions("id") // same ids, same bytes
       .write.mode("append").parquet(s"$path/tombstones")
   }
 
@@ -261,10 +263,13 @@ object Bm25Index {
       .join(tombs, Seq("id"), "left_anti")
       .select(col("id"), col("dl"))
       .localCheckpoint()
+    // rows in (bucket, term, id) order, not shuffle-fetch order, so a
+    // compaction of the same index writes the same bytes every time
     posts.repartition(col("term_bucket"))
+      .sortWithinPartitions("term_bucket", "term", "id")
       .write.mode("overwrite").partitionBy("term_bucket")
       .parquet(s"$path/postings")
-    lens.withColumn("batch", lit("base"))
+    lens.withColumn("batch", lit("base")).sortWithinPartitions("id")
       .write.mode("overwrite").parquet(s"$path/doclens")
     lens.agg(count(lit(1)).as("n_docs"), coalesce(sum(col("dl")), lit(0.0))
         .as("sum_dl"))
@@ -343,7 +348,18 @@ object Bm25Index {
     *
     * Downstream — df from the read postings, idf, per-term
     * contributions, per-query fan-out — is the [[Bm25.scoresBatch]]
-    * dataflow over the PERSISTED slim rows.
+    * arithmetic over the PERSISTED slim rows, planned around one
+    * exchange: the matched postings hash-partition by `term` once, and
+    * the (id, term) dedupe, the tombstone anti-join (broadcast) and the
+    * df window all run inside that partitioning, so the postings are
+    * scanned once and df needs no aggregate joined back.
+    *
+    * Scale shape: one reducer holds every matched posting of the
+    * query terms that hash to it, so its size is bounded by the
+    * summed df of those terms (one stop-word-like query term is its
+    * whole posting list on one task), never by the corpus. The
+    * (query, id) aggregate that follows shuffles the fanned-out
+    * contributions; [[Bm25.rankTail]] then ranks them.
     */
   def scores(spark: SparkSession, path: String, queries: DataFrame,
              k1: Double = 1.2, b: Double = 0.75,
@@ -395,17 +411,22 @@ object Bm25Index {
     // AQE would finish before it started the scan). (id, term) is
     // unique by the id-uniqueness contract, so exact duplicate posting
     // rows can only be a replayed partial append — dropDuplicates on
-    // the SLIM matched set makes the crash window harmless at serve time
+    // the SLIM matched set makes the crash window harmless at serve
+    // time. The one exchange is by term: it clusters every (id, term)
+    // group, so the dedupe runs inside it, and so does the df window
     val tfAll = ParquetStore.read(spark, s"$path/postings")
       .filter(col("term_bucket").isin(buckets: _*)) // partition pruning
       .filter(col("term").isin(uniqTerms: _*))
       .select(col("id"), col("term"), col("tf"), col("dl"))
+      .repartition(col("term"))
       .dropDuplicates("id", "term")
     // the anti-join runs on the already term-matched slim rows, so its
-    // cost scales with the hits, never the corpus; df (recomputed from
-    // these rows downstream) reflects the deletion automatically
+    // cost scales with the hits, never the corpus; df (a window over
+    // these rows downstream) reflects the deletion automatically. The
+    // tombstones broadcast, so the term partitioning survives the join
     val tf =
-      if (hasTombs) tfAll.join(tombs, Seq("id"), "left_anti") else tfAll
+      if (hasTombs) tfAll.join(broadcast(tombs), Seq("id"), "left_anti")
+      else tfAll
     Bm25.contribs(tf, n, avgdl, k1, b)
       .join(broadcast(qTerms), Seq("term"))
       .groupBy(col("__qid"), col("id"))
@@ -415,9 +436,8 @@ object Bm25Index {
   }
 
   /** Per-query top-k over [[scores]] — [[Bm25.rankTail]], the same
-    * 4-decimal round / bounded-heap rank / metadata join-back every
-    * other BM25 top-k uses. Returns (queryIdCol, rk, idCol,
-    * n_terms_hit, score).
+    * 4-decimal round / bounded-heap rank every other BM25 top-k uses.
+    * Returns (queryIdCol, rk, idCol, n_terms_hit, score).
     */
   def topK(spark: SparkSession, path: String, queries: DataFrame, k: Int,
            k1: Double = 1.2, b: Double = 0.75,
@@ -473,12 +493,13 @@ object Bm25Index {
     // src ≠ dst, so no checkpoint is needed: nothing reads a directory
     // it is overwriting
     posts.repartition(col("term_bucket"))
+      .sortWithinPartitions("term_bucket", "term", "id") // see [[compact]]
       .write.mode("overwrite").partitionBy("term_bucket")
       .parquet(s"$dst/postings")
     val lensRaw = spark.read.parquet(s"$src/doclens").dropDuplicates("id")
     val lens = (if (hasTombs) lensRaw.join(tombs, Seq("id"), "left_anti")
       else lensRaw).select(col("id"), col("dl"))
-    lens.withColumn("batch", lit("base"))
+    lens.withColumn("batch", lit("base")).sortWithinPartitions("id")
       .write.mode("overwrite").parquet(s"$dst/doclens")
     lens.agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0.0)).as("sum_dl"))

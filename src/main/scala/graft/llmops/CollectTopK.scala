@@ -5,9 +5,8 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.LongDoubleInputTypes
+import org.apache.spark.sql.graftshim.TopKInputTypes
 import org.apache.spark.sql.types._
 
 /** Bounded top-k buffer: parallel arrays sorted by the window order
@@ -15,13 +14,26 @@ import org.apache.spark.sql.types._
   * `orderBy(score.desc, id)`), capped at k entries. Linear insertion —
   * k is small (≤ [[CollectTopK.maxK]]) and rows that can't enter the
   * buffer are rejected with one comparison against the current floor.
+  * The payload arrays exist only when the aggregate carries a payload.
   */
-final class TopKBuffer(val k: Int) {
+final class TopKBuffer(val k: Int, val hasPayload: Boolean) {
   var n: Int = 0
   val ids = new Array[Long](k)
   val scores = new Array[Double](k)
   val idNulls = new Array[Boolean](k)
   val scoreNulls = new Array[Boolean](k)
+  val payloads: Array[Long] = if (hasPayload) new Array[Long](k) else null
+  val payloadNulls: Array[Boolean] =
+    if (hasPayload) new Array[Boolean](k) else null
+
+  /** Copy entry `i` of `src` into slot `j` of this buffer. */
+  def set(j: Int, src: TopKBuffer, i: Int): Unit = {
+    ids(j) = src.ids(i); scores(j) = src.scores(i)
+    idNulls(j) = src.idNulls(i); scoreNulls(j) = src.scoreNulls(i)
+    if (hasPayload) {
+      payloads(j) = src.payloads(i); payloadNulls(j) = src.payloadNulls(i)
+    }
+  }
 }
 
 /** Exact distributed per-group top-k as a native Catalyst
@@ -43,26 +55,42 @@ final class TopKBuffer(val k: Int) {
   * implicitly cast (so `int` ids work from SQL), and non-castable
   * id/score types fail analysis, not execution.
   *
-  * Output: `array<struct<_1: bigint, _2: double>>` sorted by rank —
+  * Payload: an optional long column that rides with each (id, score)
+  * entry and never takes part in the ordering — the value a top-k
+  * caller would otherwise join back onto the scored rows for (BM25's
+  * `n_terms_hit`). Of two entries tied on (score, id), the earlier
+  * one ranks first — in input order within a partition, the left
+  * buffer in a merge — so which duplicate's payload survives depends
+  * on partitioning; on a scored frame (group, id) is unique, and each
+  * entry's payload is the one its row carried.
+  *
+  * Output: `array<struct<_1: bigint, _2: double>>` sorted by rank, and
+  * `array<struct<_1: bigint, _2: double, _3: bigint>>` with a payload —
   * field names match the tuple-encoder schema the original UDAF
   * produced, so downstream `t._1` / `t._2` consumers are unchanged.
   */
-case class CollectTopK(left: Expression, right: Expression, k: Int,
+case class CollectTopK(id: Expression, score: Expression, k: Int,
+                       payload: Option[Expression] = None,
                        mutableAggBufferOffset: Int = 0,
                        inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TopKBuffer] with BinaryLike[Expression]
-    with LongDoubleInputTypes {
+    extends TypedImperativeAggregate[TopKBuffer] with TopKInputTypes {
   require(k >= 1 && k <= CollectTopK.maxK,
     s"k must be in [1, ${CollectTopK.maxK}], got $k")
 
-  private def idExpr = left
-  private def scoreExpr = right
-
+  override protected def hasPayload: Boolean = payload.isDefined
+  override def children: Seq[Expression] = Seq(id, score) ++ payload
   override def prettyName: String = "collect_top_k"
+  // the payload prints as a plain argument, so a plan without one
+  // reads as it did before the payload existed
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(id, score, k) ++ payload ++
+      Iterator(mutableAggBufferOffset, inputAggBufferOffset)
   override def nullable: Boolean = false
-  override def dataType: DataType = CollectTopK.resultType
+  override def dataType: DataType =
+    if (hasPayload) CollectTopK.payloadResultType else CollectTopK.resultType
 
-  override def createAggregationBuffer(): TopKBuffer = new TopKBuffer(k)
+  override def createAggregationBuffer(): TopKBuffer =
+    new TopKBuffer(k, hasPayload)
 
   /** Spark's total order for `(score desc, id asc)` with default null
     * ordering and NaN-largest double semantics: does entry a rank
@@ -84,8 +112,12 @@ case class CollectTopK(left: Expression, right: Expression, k: Int,
     false
   }
 
+  private def beats(a: TopKBuffer, i: Int, b: TopKBuffer, j: Int): Boolean =
+    beats(a.idNulls(i), a.ids(i), a.scoreNulls(i), a.scores(i),
+          b.idNulls(j), b.ids(j), b.scoreNulls(j), b.scores(j))
+
   private def insert(b: TopKBuffer, idN: Boolean, id: Long,
-                     sN: Boolean, s0: Double): Unit = {
+                     sN: Boolean, s0: Double, pN: Boolean, p: Long): Unit = {
     val s = if (sN) 0.0 else s0 // placeholder when null; original bits kept
     if (b.n >= b.k &&
         !beats(idN, id, sN, s,
@@ -99,42 +131,38 @@ case class CollectTopK(left: Expression, right: Expression, k: Int,
     val last = math.min(b.n, b.k - 1)
     var i = last
     while (i > pos) {
-      b.ids(i) = b.ids(i - 1); b.scores(i) = b.scores(i - 1)
-      b.idNulls(i) = b.idNulls(i - 1); b.scoreNulls(i) = b.scoreNulls(i - 1)
+      b.set(i, b, i - 1)
       i -= 1
     }
     b.ids(pos) = id; b.scores(pos) = s
     b.idNulls(pos) = idN; b.scoreNulls(pos) = sN
+    if (b.hasPayload) { b.payloads(pos) = p; b.payloadNulls(pos) = pN }
     if (b.n < b.k) b.n += 1
   }
 
   override def update(b: TopKBuffer, input: InternalRow): TopKBuffer = {
-    val idV = idExpr.eval(input)
-    val sV = scoreExpr.eval(input)
+    val idV = id.eval(input)
+    val sV = score.eval(input)
+    val pV = payload.map(_.eval(input)).orNull
     insert(b,
       idV == null, if (idV == null) 0L else idV.asInstanceOf[Long],
-      sV == null, if (sV == null) 0.0 else sV.asInstanceOf[Double])
+      sV == null, if (sV == null) 0.0 else sV.asInstanceOf[Double],
+      pV == null, if (pV == null) 0L else pV.asInstanceOf[Long])
     b
   }
 
   override def merge(a: TopKBuffer, other: TopKBuffer): TopKBuffer = {
-    val out = new TopKBuffer(k)
+    val out = new TopKBuffer(k, hasPayload)
     var i = 0
     var j = 0
     while (out.n < k && (i < a.n || j < other.n)) {
-      val takeA = j >= other.n || (i < a.n &&
-        beats(a.idNulls(i), a.ids(i), a.scoreNulls(i), a.scores(i),
-              other.idNulls(j), other.ids(j), other.scoreNulls(j),
-              other.scores(j)))
-      if (takeA) {
-        out.ids(out.n) = a.ids(i); out.scores(out.n) = a.scores(i)
-        out.idNulls(out.n) = a.idNulls(i); out.scoreNulls(out.n) = a.scoreNulls(i)
-        i += 1
+      // on a (score, id) tie `a`'s entry goes first: with update's
+      // insert-after-equals, a fold over partitions in order keeps the
+      // entry a stable sort would
+      if (j >= other.n || (i < a.n && !beats(other, j, a, i))) {
+        out.set(out.n, a, i); i += 1
       } else {
-        out.ids(out.n) = other.ids(j); out.scores(out.n) = other.scores(j)
-        out.idNulls(out.n) = other.idNulls(j)
-        out.scoreNulls(out.n) = other.scoreNulls(j)
-        j += 1
+        out.set(out.n, other, j); j += 1
       }
       out.n += 1
     }
@@ -145,21 +173,26 @@ case class CollectTopK(left: Expression, right: Expression, k: Int,
     val rows = new Array[Any](b.n)
     var i = 0
     while (i < b.n) {
-      rows(i) = new GenericInternalRow(Array[Any](
-        if (b.idNulls(i)) null else b.ids(i),
-        if (b.scoreNulls(i)) null else b.scores(i)))
+      val idV = if (b.idNulls(i)) null else b.ids(i)
+      val sV = if (b.scoreNulls(i)) null else b.scores(i)
+      rows(i) = new GenericInternalRow(
+        if (hasPayload)
+          Array[Any](idV, sV, if (b.payloadNulls(i)) null else b.payloads(i))
+        else Array[Any](idV, sV))
       i += 1
     }
     new GenericArrayData(rows)
   }
 
   override def serialize(b: TopKBuffer): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 + b.n * 17)
+    val bb = ByteBuffer.allocate(8 + b.n * (if (hasPayload) 25 else 17))
     bb.putInt(b.k).putInt(b.n)
     var i = 0
     while (i < b.n) {
-      bb.put((((if (b.idNulls(i)) 1 else 0)) | (if (b.scoreNulls(i)) 2 else 0)).toByte)
+      bb.put(((if (b.idNulls(i)) 1 else 0) | (if (b.scoreNulls(i)) 2 else 0) |
+        (if (hasPayload && b.payloadNulls(i)) 4 else 0)).toByte)
       bb.putLong(b.ids(i)).putDouble(b.scores(i))
+      if (hasPayload) bb.putLong(b.payloads(i))
       i += 1
     }
     bb.array()
@@ -168,7 +201,7 @@ case class CollectTopK(left: Expression, right: Expression, k: Int,
   override def deserialize(bytes: Array[Byte]): TopKBuffer = {
     val bb = ByteBuffer.wrap(bytes)
     val bk = bb.getInt
-    val b = new TopKBuffer(bk)
+    val b = new TopKBuffer(bk, hasPayload)
     b.n = bb.getInt
     var i = 0
     while (i < b.n) {
@@ -177,6 +210,10 @@ case class CollectTopK(left: Expression, right: Expression, k: Int,
       b.scoreNulls(i) = (flags & 2) != 0
       b.ids(i) = bb.getLong
       b.scores(i) = bb.getDouble
+      if (hasPayload) {
+        b.payloadNulls(i) = (flags & 4) != 0
+        b.payloads(i) = bb.getLong
+      }
       i += 1
     }
     b
@@ -187,8 +224,9 @@ case class CollectTopK(left: Expression, right: Expression, k: Int,
   override def withNewInputAggBufferOffset(offset: Int): CollectTopK =
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CollectTopK =
-    copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[Expression]): CollectTopK =
+    copy(id = newChildren(0), score = newChildren(1),
+      payload = payload.map(_ => newChildren(2)))
 }
 
 object CollectTopK {
@@ -200,5 +238,11 @@ object CollectTopK {
 
   val resultType: DataType = ArrayType(StructType(Seq(
     StructField("_1", LongType), StructField("_2", DoubleType))),
+    containsNull = false)
+
+  /** [[resultType]] plus the payload as field `_3`. */
+  val payloadResultType: DataType = ArrayType(StructType(Seq(
+    StructField("_1", LongType), StructField("_2", DoubleType),
+    StructField("_3", LongType))),
     containsNull = false)
 }

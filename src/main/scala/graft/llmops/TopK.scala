@@ -69,11 +69,25 @@ object TopK {
     * `Aggregator` formulation of the same kernel, kept as the
     * differential-testing reference (TopKSpec pins them equal).
     */
-  def topK(idCol: Column, scoreCol: Column, k: Int): Column = {
+  def topK(idCol: Column, scoreCol: Column, k: Int): Column =
+    collect(idCol, scoreCol, k, None)
+
+  /** [[topK]] with a long `payloadCol` riding each entry as struct
+    * field `_3` — it takes no part in the ordering, so the ranking is
+    * [[topK]]'s and a caller reads the payload instead of joining the
+    * top ids back onto the scored rows.
+    */
+  def topK(idCol: Column, scoreCol: Column, payloadCol: Column,
+           k: Int): Column =
+    collect(idCol, scoreCol, k, Some(payloadCol))
+
+  private def collect(idCol: Column, scoreCol: Column, k: Int,
+                      payloadCol: Option[Column]): Column = {
     import org.apache.spark.sql.graftshim.ColumnBridge
     ColumnBridge.column(CollectTopK(
         ColumnBridge.expression(idCol.cast("long")),
-        ColumnBridge.expression(scoreCol.cast("double")), k)
+        ColumnBridge.expression(scoreCol.cast("double")), k,
+        payloadCol.map(c => ColumnBridge.expression(c.cast("long"))))
       .toAggregateExpression()).as("topk")
   }
 

@@ -6,12 +6,14 @@ import org.apache.spark.sql.types.{AbstractDataType, DoubleType, LongType, Strin
 /** `AbstractDataType` is `private[sql]`, so an expression outside the
   * Spark package tree cannot override `inputTypes` directly; this
   * bridge trait (like [[ColumnBridge]], access-only — no Spark code)
-  * pins the (long, double) signature used by graft's top-k aggregate
-  * so the analyzer inserts implicit casts and rejects non-castable
-  * inputs at analysis time.
+  * pins the (long, double[, long payload]) signature used by graft's
+  * top-k aggregate so the analyzer inserts implicit casts and rejects
+  * non-castable inputs at analysis time.
   */
-trait LongDoubleInputTypes extends ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, DoubleType)
+trait TopKInputTypes extends ImplicitCastInputTypes {
+  protected def hasPayload: Boolean
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(LongType, DoubleType) ++ (if (hasPayload) Seq(LongType) else Nil)
 }
 
 /** Single string input (the heavy-hitter item column). */

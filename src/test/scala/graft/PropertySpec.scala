@@ -186,7 +186,8 @@ class PropertySpec extends SparkTestBase {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.types.{DoubleType, LongType}
-    val entryG: Gen[(Option[Long], Option[Double])] = for {
+    type E = (Option[Long], Option[Double])
+    val entryG: Gen[E] = for {
       id <- Gen.option(Gen.chooseNum(-5L, 5L)) // small range forces ties
       s <- Gen.option(Gen.oneOf(
         Gen.chooseNum(-2.0, 2.0).map(x => math.rint(x * 4) / 4), // tie-prone
@@ -197,7 +198,7 @@ class PropertySpec extends SparkTestBase {
     // NaN largest among scores (so FIRST under desc), -0.0 == 0.0 —
     // java.lang.Double.compare gives both once -0.0 is normalized
     // via s + 0.0
-    implicit val ord: Ordering[(Option[Long], Option[Double])] =
+    implicit val ord: Ordering[E] =
       (a, b) => {
         val (aSN, bSN) = (a._2.isEmpty, b._2.isEmpty)
         if (aSN != bSN) { if (aSN) 1 else -1 }
@@ -213,18 +214,24 @@ class PropertySpec extends SparkTestBase {
           }
         }
       }
-    val listG = Gen.listOf(entryG)
-    for (i <- 0 until 200) {
-      val entries = samples(listG, 1)(0)
+    // the payload: a function of the whole entry, null for null ids
+    def payload(e: E): Option[Long] =
+      e._1.map(_ * 1000003L ^ e._2.map(java.lang.Double.doubleToRawLongBits)
+        .getOrElse(7L))
+    val id = BoundReference(0, LongType, nullable = true)
+    val score = BoundReference(1, DoubleType, nullable = true)
+    for ((entries, i) <- samples(Gen.listOf(entryG), 200).zipWithIndex;
+         withPayload <- Seq(false, true)) {
       val k = 1 + i % 7
-      val agg = graft.llmops.CollectTopK(
-        BoundReference(0, LongType, nullable = true),
-        BoundReference(1, DoubleType, nullable = true), k)
+      val agg = graft.llmops.CollectTopK(id, score, k,
+        if (withPayload) Some(BoundReference(2, LongType, nullable = true))
+        else None)
       // split into random partitions, update each, then merge
       val parts = entries.grouped(math.max(1, 1 + i % 4)).toSeq
       val bufs = parts.map { p =>
         p.foldLeft(agg.createAggregationBuffer()) { (b, e) =>
-          agg.update(b, InternalRow(e._1.orNull, e._2.orNull))
+          agg.update(b, InternalRow(e._1.orNull, e._2.orNull,
+            payload(e).orNull))
         }
       }
       val merged = bufs.foldLeft(agg.createAggregationBuffer())(agg.merge)
@@ -234,14 +241,18 @@ class PropertySpec extends SparkTestBase {
         .array.toSeq.map { r =>
           val row = r.asInstanceOf[InternalRow]
           (if (row.isNullAt(0)) None else Some(row.getLong(0)),
-           if (row.isNullAt(1)) None else Some(row.getDouble(1)))
+           if (row.isNullAt(1)) None else Some(row.getDouble(1)),
+           if (!withPayload || row.isNullAt(2)) None else Some(row.getLong(2)))
         }
       // original score values survive (incl. -0.0's sign), only the
-      // ORDER treats -0.0 == 0.0 — exactly like the window plan
-      val want = entries.sorted.take(k)
-      def show(s: Seq[(Option[Long], Option[Double])]) = s.mkString(",")
+      // ORDER treats -0.0 == 0.0 — exactly like the window plan; the
+      // payload rides its entry, and entries tied on (score, id) keep
+      // their input order, as in the stable sort
+      val want = entries.sorted.take(k).map(e =>
+        (e._1, e._2, if (withPayload) payload(e) else None))
       // NaN-safe compare: stringify
-      assert(show(got) == show(want), s"k=$k entries=$entries")
+      assert(got.mkString(",") == want.mkString(","),
+        s"k=$k payload=$withPayload entries=$entries")
     }
   }
 

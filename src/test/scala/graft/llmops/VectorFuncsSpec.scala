@@ -143,6 +143,42 @@ class VectorFuncsSpec extends SparkTestBase {
     assert("ObjectHashAggregate".r.findAllIn(plan).size >= 2, plan.take(2000))
   }
 
+  test("payload heap equals the row_number window, payload included, " +
+      "on ties, null scores, NaN and -0.0") {
+    import org.apache.spark.sql.expressions.Window
+    // distinct ids per group (one null among them), tie-prone scores
+    val rows = for (g <- 0 until 5; i <- 0 until 40) yield {
+      val s: Option[Double] = i % 10 match {
+        case 0 => None
+        case 1 => Some(Double.NaN)
+        case 2 => Some(-0.0)
+        case 3 => Some(0.0)
+        case _ => Some((i * 7 % 5).toDouble / 4)
+      }
+      (g, if (i == 39) None else Some(g * 1000L + i), s,
+        if (i % 7 == 0) None else Some(i * 31L))
+    }
+    val df = rows.toDF("g", "id", "s", "p").repartition(3)
+    val k = 12
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getInt(0), r.getInt(1), Option(r.get(2)), Option(r.get(3))
+        .map(x => java.lang.Double.doubleToRawLongBits(
+          x.asInstanceOf[Double])), Option(r.get(4)))
+    spark.conf.set("spark.graft.rewriteWindowTopK", "false")
+    val viaWindow = try {
+      df.withColumn("rk", row_number().over(
+          Window.partitionBy($"g").orderBy($"s".desc, $"id")))
+        .filter($"rk" <= k)
+        .select($"g", $"rk", $"id", $"s", $"p").collect().map(key).toSet
+    } finally spark.conf.unset("spark.graft.rewriteWindowTopK")
+    val viaHeap = df.groupBy($"g").agg(TopK.topK($"id", $"s", $"p", k))
+      .select($"g", posexplode($"topk"))
+      .select($"g", ($"pos" + 1).as("rk"), $"col._1", $"col._2", $"col._3")
+      .collect().map(key).toSet
+    assert(viaWindow.size == 5 * k)
+    assert(viaHeap == viaWindow)
+  }
+
   test("agg re-rank fails fast on non-integral id columns") {
     // string ids would cast to null and silently corrupt the top-k;
     // the guard routes the caller to impl="window" instead
