@@ -23,6 +23,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    (path, length, mtime of every data file). Spark writes new
   *    part-file names on every overwrite or append, so any rewrite of
   *    the store changes the key and the next call reloads.
+  *  - [[exists]] and [[delete]] are the stores' directory checks and
+  *    removals (tombstone stores, compaction backups).
   */
 object ParquetStore {
 
@@ -75,6 +77,20 @@ object ParquetStore {
             v
         }
     }
+  }
+
+  /** Whether a store directory exists. A missing path is a clean
+    * `false`; any other filesystem error propagates.
+    */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
+
+  /** Recursively delete a store directory; a missing path is a no-op. */
+  def delete(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
   }
 
   private def read(spark: SparkSession, conf: Configuration, path: String,

@@ -24,11 +24,6 @@ import graft.io.ParquetStore
   */
 object AnnIndex {
 
-  private def dirExists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
-  }
-
   /** Tombstone-delete vectors by id: appends the distinct ids under
     * `path/_tombstones/ids` (underscore parent → invisible to the
     * root index scan, the `_models` pattern) — no partition moves.
@@ -53,7 +48,7 @@ object AnnIndex {
     */
   def compact(spark: SparkSession, path: String,
               corpusId: String = "vec_id"): Unit = {
-    if (!dirExists(spark, s"$path/_tombstones/ids")) return
+    if (!ParquetStore.exists(spark, s"$path/_tombstones/ids")) return
     val (cents, books) = loadModels(spark, path)
     val metrics = ParquetStore.read(spark, s"$path/_stats/metrics")
       .localCheckpoint() // materialized: its parent dir is overwritten
@@ -82,12 +77,7 @@ object AnnIndex {
     Models.saveIvfAdc(spark, s"$path/_models", cents, books)
     metrics.coalesce(1).write.mode("overwrite")
       .parquet(s"$path/_stats/metrics")
-    deleteDir(spark, bak)
-  }
-
-  private def deleteDir(spark: SparkSession, p: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
+    ParquetStore.delete(spark, bak)
   }
 
   /** Train (or accept) models and write the index: parquet
@@ -264,11 +254,11 @@ object AnnIndex {
   def topK(spark: SparkSession, path: String, queries: DataFrame, k: Int,
            nprobe: Int = 4,
            corpusId: String = "vec_id",
-           queryId: String = "query_id", queryVec: String = "query_vec",
-           impl: String = "agg", scan: String = "lut"): DataFrame = {
+           queryId: String = "query_id", queryVec: String = "query_vec")
+      : DataFrame = {
     val (cents, books) = loadModels(spark, path)
     topKWithModels(spark, path, queries, k, cents, books, nprobe,
-      corpusId, queryId, queryVec, impl, scan)
+      corpusId, queryId, queryVec)
   }
 
   /** [[topK]] with pre-loaded models — the seam a long-lived server
@@ -281,15 +271,13 @@ object AnnIndex {
                      books: Array[Array[Array[Float]]],
                      nprobe: Int = 4,
                      corpusId: String = "vec_id",
-                     queryId: String = "query_id", queryVec: String = "query_vec",
-                     impl: String = "agg", scan: String = "lut"): DataFrame = {
-    val probes = Ivf.withLut(queries, queryVec, books, scan)
-      .withColumn("list_id",
-        explode(Ivf.nearest_centroids(col(queryVec), cents, nprobe)))
+                     queryId: String = "query_id", queryVec: String = "query_vec")
+      : DataFrame = {
+    val lists = Ivf.nearest_centroids(col(queryVec), cents, nprobe)
     // driver-side probe set: nprobe·|queries| ints — the query batch
     // is broadcast-bound anyway, so this collect is bounded, and the
     // dedupe runs here rather than as a distinct shuffle
-    val probedLists = probes.select(col("list_id"))
+    val probedLists = queries.select(explode(lists))
       .collect().map(_.getInt(0)).distinct.toSeq
     val codedAll = ParquetStore.read(spark, path)
       .filter(col("list_id").isin(probedLists: _*))
@@ -297,17 +285,14 @@ object AnnIndex {
     // cost scales with the probe set, and absence of the store (the
     // common case) costs one driver-side existence check
     val coded =
-      if (dirExists(spark, s"$path/_tombstones/ids"))
+      if (ParquetStore.exists(spark, s"$path/_tombstones/ids"))
         codedAll.join(
           ParquetStore.read(spark, s"$path/_tombstones/ids")
             .select(col("id").as(corpusId)).distinct(),
           Seq(corpusId), "left_anti")
       else codedAll
-    val scored = Ivf.adcScore(coded.join(broadcast(probes), Seq("list_id")),
-        books, queryVec, scan)
-      .filter(col(corpusId) =!= col(queryId))
-      .filter(col("sim").isNotNull)
-    VectorFuncs.rerankTopK(scored, k, queryId, corpusId, impl)
+    Ivf.adcTopK(coded, queries, k, books, Some(lists),
+      corpusId, queryId, queryVec)
   }
 
   // ------------------------------------------------------------------
@@ -350,7 +335,7 @@ object AnnIndex {
     val (cents, books) = loadModels(spark, src)
     val codesAll = spark.read.parquet(src)
     val live =
-      if (dirExists(spark, s"$src/_tombstones/ids"))
+      if (ParquetStore.exists(spark, s"$src/_tombstones/ids"))
         codesAll.join(
           spark.read.parquet(s"$src/_tombstones/ids")
             .select(col("id").as(corpusId)).distinct(),
@@ -410,8 +395,7 @@ object AnnIndex {
                     k: Int, nprobe: Int = 4,
                     corpusId: String = "vec_id",
                     queryId: String = "query_id",
-                    queryVec: String = "query_vec",
-                    impl: String = "agg", scan: String = "lut"): DataFrame =
+                    queryVec: String = "query_vec"): DataFrame =
     topK(spark, VersionedIndex.currentPath(spark, root), queries, k,
-      nprobe, corpusId, queryId, queryVec, impl, scan)
+      nprobe, corpusId, queryId, queryVec)
 }

@@ -61,11 +61,6 @@ object Binning {
         round(percentile(value, lit(p)), 6).as(s"q${i + 1}") }: _*)
   }
 
-  /** Assign per-group bins from a [[groupQuantileThresholds]] table:
-    * value ≤ group's q_k ⇒ bin k, else |probs|. A broadcast join on
-    * the group key (the table is |groups| rows) plus a narrow
-    * when-chain — no wide shuffle, any corpus size.
-    */
   /** Per-group rank normalization (X174): percent_rank of `valueCol`
     * WITHIN `byCol`, as a join against per-(group, value) cumulative
     * counts instead of a window over raw rows. Why it exists: a
@@ -140,6 +135,11 @@ object Binning {
       .withColumnRenamed("__hi", s"${outCol}_hi")
   }
 
+  /** Assign per-group bins from a [[groupQuantileThresholds]] table:
+    * value ≤ group's q_k ⇒ bin k, else |probs|. A broadcast join on
+    * the group key (the table is |groups| rows) plus a narrow
+    * when-chain — no wide shuffle, any corpus size.
+    */
   def groupBins(df: DataFrame, thresholds: DataFrame, group: Column,
                 value: Column, binCol: String = "bin"): DataFrame = {
     val nq = thresholds.columns.count(_.startsWith("q"))

@@ -195,7 +195,7 @@ object Bm25 {
                   queryIdCol: String = "query_id",
                   queryTextCol: String = "text",
                   seg: Segmenter = Segmenter.CharLevel): DataFrame = {
-    requireIntegralId(queries, queryIdCol, "query")
+    TopK.requireIntegralId(queries, queryIdCol, "Bm25.scoresBatch")
     // per-query distinct terms (bag-of-words query semantics, same as
     // `scores`); the term union drives the single corpus pass
     val qTerms = queryTerms(queries, queryIdCol, queryTextCol, seg)
@@ -246,17 +246,11 @@ object Bm25 {
                 queryIdCol: String = "query_id",
                 queryTextCol: String = "text",
                 seg: Segmenter = Segmenter.CharLevel): DataFrame = {
-    requireIntegralId(docs, idCol, "doc")
+    TopK.requireIntegralId(docs, idCol, "Bm25.topKBatch")
     rankTail(scoresBatch(docs, queries, k1, b, idCol, textCol,
       queryIdCol, queryTextCol, seg), k, queryIdCol, idCol)
   }
 
-  /** Benchmark-decontamination probe, the workload [[topKBatch]]
-    * exists for: for every benchmark question, the top-k corpus
-    * documents whose BM25 score ≥ `minScore` — the documents that
-    * could answer it and belong in a hold-out review. One job
-    * regardless of |benchmark|.
-    */
   /** Weighted multi-query BM25: `qTermsW` = (__qid, term, w) rows;
     * score(d, q) = Σ_t w(q,t) · contrib(t, d). The corpus machinery is
     * [[scoresBatch]]'s (one pass for the union of all terms); only the
@@ -357,7 +351,7 @@ object Bm25 {
               idCol: String = "doc_id", textCol: String = "text",
               queryIdCol: String = "query_id",
               queryTextCol: String = "text"): DataFrame = {
-    requireIntegralId(docs, idCol, "doc")
+    TopK.requireIntegralId(docs, idCol, "Bm25.rm3TopK")
     val qw = rm3Terms(docs, queries, fbDocs, fbTerms, origWeight, k1, b,
         idCol, textCol, queryIdCol, queryTextCol)
       .withColumnRenamed(queryIdCol, "__qid")
@@ -369,24 +363,12 @@ object Bm25 {
       k, queryIdCol, idCol)
   }
 
-  /** The batch rankers ride the [[CollectTopK]] (long, double)
-    * bounded-heap, so ids must be integral — a silent
-    * `cast("long")` of a string id would null every id and return an
-    * empty/garbage ranking with no error (string-keyed corpora — URLs,
-    * content hashes — should rank on `xxhash64(id)` and join back).
-    * Statically checkable from the schema, so check it.
+  /** Benchmark-decontamination probe, the workload [[topKBatch]]
+    * exists for: for every benchmark question, the top-k corpus
+    * documents whose BM25 score ≥ `minScore` — the documents that
+    * could answer it and belong in a hold-out review. One job
+    * regardless of |benchmark|.
     */
-  private[llmops] def requireIntegralId(df: DataFrame, idCol: String,
-                                what: String): Unit = {
-    import org.apache.spark.sql.types._
-    val dt = df.schema(idCol).dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-      s"batch BM25 needs an integral $what id column, got " +
-        s"'$idCol': ${dt.simpleString} — rank on xxhash64($idCol) " +
-        "(and join the original ids back), or use the single-query " +
-        "scores/topK which accept any id type")
-  }
-
   def decontaminationProbe(corpus: DataFrame, benchmark: DataFrame,
                            k: Int = 10, minScore: Double = 0.0,
                            idCol: String = "doc_id",

@@ -51,16 +51,6 @@ import graft.io.ParquetStore
   */
 object Bm25Index {
 
-  private def dirExists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
-  }
-
-  private def deleteDir(spark: SparkSession, p: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
-  }
-
   /** Build the index at `path`: `path/postings` (partitioned by
     * term_bucket), `path/stats` (one additive row), `path/doclens`
     * (one (id, dl) row per doc — the deletion stats base),
@@ -71,10 +61,10 @@ object Bm25Index {
   def write(docs: DataFrame, path: String, nBuckets: Int = 64,
             idCol: String = "doc_id", textCol: String = "text"): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
-    Bm25.requireIntegralId(docs, idCol, "doc")
+    TopK.requireIntegralId(docs, idCol, "Bm25Index.write")
     val spark = docs.sparkSession
     import spark.implicits._
-    deleteDir(spark, s"$path/tombstones")
+    ParquetStore.delete(spark, s"$path/tombstones")
     // one tokenize pass feeds BOTH stats stores: the additive stats
     // row is the exact aggregate of the doclens rows (every dl is an
     // integral double, so the sum is order-free), so deriving it from
@@ -165,7 +155,7 @@ object Bm25Index {
              idCol: String = "doc_id", textCol: String = "text",
              batchTag: String = java.util.UUID.randomUUID().toString)
       : Unit = {
-    Bm25.requireIntegralId(newDocs, idCol, "doc")
+    TopK.requireIntegralId(newDocs, idCol, "Bm25Index.append")
     val spark = newDocs.sparkSession
     // re-appending a TOMBSTONED id before compact is a correctness
     // trap: the serve-time anti-join would shadow the new postings
@@ -173,7 +163,7 @@ object Bm25Index {
     // and silently pruning the tombstone here would resurrect the OLD
     // postings instead. Fail loudly; upsert is delete → compact →
     // append (what Retrieval.upsertDocs sequences).
-    if (dirExists(spark, s"$path/tombstones")) {
+    if (ParquetStore.exists(spark, s"$path/tombstones")) {
       val doomed = ParquetStore.read(spark, s"$path/tombstones")
         .select(col("id")).distinct()
       val clash = newDocs.select(col(idCol).cast("long").as("id"))
@@ -232,9 +222,9 @@ object Bm25Index {
     */
   def delete(ids: DataFrame, path: String,
              idCol: String = "doc_id"): Unit = {
-    Bm25.requireIntegralId(ids, idCol, "doc")
+    TopK.requireIntegralId(ids, idCol, "Bm25Index.delete")
     val spark = ids.sparkSession
-    require(dirExists(spark, s"$path/doclens"),
+    require(ParquetStore.exists(spark, s"$path/doclens"),
       s"$path has no doclens store (written before deletion support); " +
         "rebuild with Bm25Index.write before deleting")
     ids.select(col(idCol).cast("long").as("id")).distinct()
@@ -251,7 +241,7 @@ object Bm25Index {
     * when nothing was deleted.
     */
   def compact(spark: SparkSession, path: String): Unit = {
-    if (!dirExists(spark, s"$path/tombstones")) return
+    if (!ParquetStore.exists(spark, s"$path/tombstones")) return
     val tombs = ParquetStore.read(spark, s"$path/tombstones")
       .select(col("id")).distinct()
     val posts = ParquetStore.read(spark, s"$path/postings")
@@ -275,7 +265,7 @@ object Bm25Index {
         .as("sum_dl"))
       .withColumn("batch", lit("base"))
       .write.mode("overwrite").parquet(s"$path/stats")
-    deleteDir(spark, s"$path/tombstones")
+    ParquetStore.delete(spark, s"$path/tombstones")
   }
 
   /** Streaming growth: a document stream appends postings + stats per
@@ -367,7 +357,7 @@ object Bm25Index {
              queryIdCol: String = "query_id",
              queryTextCol: String = "text"): DataFrame = {
     import spark.implicits._
-    Bm25.requireIntegralId(queries, queryIdCol, "query")
+    TopK.requireIntegralId(queries, queryIdCol, "Bm25Index.scores")
     val nBuckets = bucketsOf(spark, path)
     // one partition, so the limit's take is one job whatever the
     // query frame's partitioning
@@ -384,7 +374,7 @@ object Bm25Index {
     val qTerms = qt.map(x => (x._1, x._2)).toDF("__qid", "term")
     val uniqTerms = qt.map(_._2).distinct
     val buckets = qt.map(_._3).distinct
-    val hasTombs = dirExists(spark, s"$path/tombstones")
+    val hasTombs = ParquetStore.exists(spark, s"$path/tombstones")
     val tombs =
       if (hasTombs)
         ParquetStore.read(spark, s"$path/tombstones")
@@ -481,7 +471,7 @@ object Bm25Index {
     val src = VersionedIndex.currentPath(spark, root)
     val v = VersionedIndex.next(spark, root)
     val dst = VersionedIndex.versionPath(root, v)
-    val hasTombs = dirExists(spark, s"$src/tombstones")
+    val hasTombs = ParquetStore.exists(spark, s"$src/tombstones")
     val tombs =
       if (hasTombs)
         spark.read.parquet(s"$src/tombstones").select(col("id")).distinct()

@@ -15,19 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Guard against quadratic fan-out in banded self-joins: drop every
-    * row belonging to a (band, band_hash) bucket with more than
-    * `maxBucket` members. A degenerate bucket (thousands of docs with
-    * an identical band hash — boilerplate, empty docs, a template
-    * corpus) otherwise produces |bucket|² candidate pairs; capping
-    * bounds the join output at maxBucket² per bucket, linear in corpus
-    * size. Same mechanism as Winnowing.containmentPairs' stop-
-    * fingerprint df-filter. Members of dropped buckets can still pair
-    * through their other bands (multi-band OR), and truly identical
-    * docs belong to `exact` dedup, not near-dup pair generation.
-    * The window count partitions by the same keys the subsequent
-    * self-join shuffles on, so Catalyst reuses one exchange.
-    */
   /** Prefix of the observed-metric names [[capBuckets]] emits. Every
     * cap site reports (rows_dropped, max_bucket_n, rows_seen) through
     * Spark's `observe` — collected DURING the run by the same job, no
@@ -45,6 +32,19 @@ object Dedup {
     */
   private val capSeq = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Guard against quadratic fan-out in banded self-joins: drop every
+    * row belonging to a (band, band_hash) bucket with more than
+    * `maxBucket` members. A degenerate bucket (thousands of docs with
+    * an identical band hash — boilerplate, empty docs, a template
+    * corpus) otherwise produces |bucket|² candidate pairs; capping
+    * bounds the join output at maxBucket² per bucket, linear in corpus
+    * size. Same mechanism as Winnowing.containmentPairs' stop-
+    * fingerprint df-filter. Members of dropped buckets can still pair
+    * through their other bands (multi-band OR), and truly identical
+    * docs belong to `exact` dedup, not near-dup pair generation.
+    * The window count partitions by the same keys the subsequent
+    * self-join shuffles on, so Catalyst reuses one exchange.
+    */
   private[llmops] def capBuckets(banded: DataFrame, maxBucket: Int,
                          keys: Seq[String] = Seq("band", "band_hash"))
       : DataFrame = {

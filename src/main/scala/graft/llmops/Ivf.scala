@@ -313,15 +313,14 @@ object Ivf {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nlist: Int = 16, nprobe: Int = 4, kmeansIters: Int = 0,
               corpusId: String = "vec_id", corpusVec: String = "embedding",
-              queryId: String = "query_id", queryVec: String = "query_vec",
-              impl: String = "agg")
+              queryId: String = "query_id", queryVec: String = "query_vec")
       : DataFrame = {
     val cents =
       if (kmeansIters > 0)
         kmeansCentroids(corpus, nlist, kmeansIters, corpusId, corpusVec)
       else sampleCentroids(corpus, nlist, corpusId, corpusVec)
     ivfTopKWithCentroids(corpus, queries, k, cents, nprobe,
-      corpusId, corpusVec, queryId, queryVec, impl)
+      corpusId, corpusVec, queryId, queryVec)
   }
 
   /** [[ivfTopK]] with an externally supplied quantizer. Lets a caller
@@ -335,8 +334,7 @@ object Ivf {
                            corpusId: String = "vec_id",
                            corpusVec: String = "embedding",
                            queryId: String = "query_id",
-                           queryVec: String = "query_vec",
-                           impl: String = "agg")
+                           queryVec: String = "query_vec")
       : DataFrame = {
     val assigned = corpus.withColumn("list_id",
       element_at(nearest_centroids(col(corpusVec), centroids, 1), 1))
@@ -346,9 +344,9 @@ object Ivf {
       .filter(col(corpusId) =!= col(queryId))
       .withColumn("sim", VectorFuncs.cosine(col(corpusVec), col(queryVec)))
     // an inverted list holds |corpus|/nlist vectors — still huge at
-    // corpus scale, so the scale-safe bounded-heap re-rank is the
-    // default here too (impl contract: [[VectorFuncs.rerankTopK]])
-    VectorFuncs.rerankTopK(scored, k, queryId, corpusId, impl)
+    // corpus scale, so the re-rank is the scale-safe bounded heap
+    // ([[VectorFuncs.rerankTopK]])
+    VectorFuncs.rerankTopK(scored, k, queryId, corpusId)
   }
 
   // ---------------------------------------------------------------- PQ
@@ -603,10 +601,10 @@ object Ivf {
   /** PQ approximate top-k by ADC inner product: train codebooks,
     * compress the corpus to (id, m codes), broadcast the query batch
     * and scan the codes — the exhaustive-scan shape whose per-row
-    * cost is m table lookups over m ints (the default `scan = "lut"`
-    * precomputes each query's m·k subspace dots once — Jégou et al.
-    * 2011 §IV-A), versus dim float multiplies for brute force, and
-    * whose scan input is ~dim·4/m× smaller than the raw vectors.
+    * cost is m table lookups over m ints (each query's m·k subspace
+    * dots are precomputed once — Jégou et al. 2011 §IV-A), versus dim
+    * float multiplies for brute force, and whose scan input is
+    * ~dim·4/m× smaller than the raw vectors.
     * Output: (query_id, vec_id, sim,
     * rk) where sim is the ADC score ROUNDED to 6 dp before ranking:
     * identical-code candidates tie exactly and fall back to the id
@@ -617,11 +615,11 @@ object Ivf {
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              m: Int = 8, codewords: Int = 16, iters: Int = 0,
              corpusId: String = "vec_id", corpusVec: String = "embedding",
-             queryId: String = "query_id", queryVec: String = "query_vec",
-             impl: String = "agg", scan: String = "lut"): DataFrame = {
+             queryId: String = "query_id", queryVec: String = "query_vec")
+      : DataFrame = {
     val books = pqCodebooks(corpus, m, codewords, iters, corpusId, corpusVec)
     pqTopKWithBooks(corpus, queries, k, books,
-      corpusId, corpusVec, queryId, queryVec, impl, scan)
+      corpusId, corpusVec, queryId, queryVec)
   }
 
   /** [[pqTopK]] with externally trained codebooks — same seam as
@@ -634,56 +632,61 @@ object Ivf {
                       corpusId: String = "vec_id",
                       corpusVec: String = "embedding",
                       queryId: String = "query_id",
-                      queryVec: String = "query_vec",
-                      impl: String = "agg",
-                      scan: String = "lut"): DataFrame = {
+                      queryVec: String = "query_vec"): DataFrame = {
     val coded = corpus.select(col(corpusId),
       pqEncode(col(corpusVec), books).as("codes"))
-    val scored = adcScore(coded.crossJoin(broadcast(
-        withLut(queries, queryVec, books, scan))),
-        books, queryVec, scan)
-      .filter(col(corpusId) =!= col(queryId))
-      // an unscorable candidate (null vector, dim mismatch) cannot
-      // rank — drop it rather than let a null score pad a sparse heap
-      .filter(col("sim").isNotNull)
-    VectorFuncs.rerankTopK(scored, k, queryId, corpusId, impl)
+    adcTopK(coded, queries, k, books, None, corpusId, queryId, queryVec)
   }
 
-  /** Shared scan plumbing for [[pqTopKWithBooks]] / [[ivfAdcTopKWithModels]]:
-    * `scan = "lut"` (default) precomputes the per-query lookup table
-    * on the query side — it ships inside the broadcast relation, and
-    * every candidate then costs m lookups + adds instead of a
-    * dim-float reconstruction dot; `scan = "dot"` scores by the
-    * spelled-out reconstruction dot (the form the kernel specs pin
-    * against). Both round to 6 dp before ranking and carry the same
-    * null contract, so they rank identically.
+  /** The scoring tail of every PQ-coded scan ([[pqTopKWithBooks]],
+    * [[ivfAdcTopKWithModels]], [[imiAdcTopKWithModels]],
+    * [[ivfAdcResidualTopKWithModels]], [[AnnIndex.topKWithModels]]).
+    * Each query row gets its m·k lookup table ([[pq_lut]]) on the
+    * query side, so the table ships inside the broadcast relation and
+    * a candidate costs m lookups and adds instead of a dim-float
+    * reconstruction dot. With `lists` (the list ids each query
+    * probes) the queries explode to one row per probed list and join
+    * the coded rows on `list_id`; without, every query meets every
+    * coded row (the exhaustive scan's cross join). `coarse`, a
+    * per-(query, list) term evaluated on the query side, adds to the
+    * score: the residual path's centroid dot. The score rounds to
+    * 6 dp before ranking, so identical-code candidates tie exactly
+    * and fall back to the id tie-break in any replay; self-pairs and
+    * unscorable candidates (null vector, dim mismatch) drop before
+    * the bounded-heap re-rank.
     */
-  private[llmops] def withLut(queries: DataFrame, queryVec: String,
+  private[llmops] def adcTopK(coded: DataFrame, queries: DataFrame, k: Int,
                               books: Array[Array[Array[Float]]],
-                              scan: String): DataFrame = scan match {
-    case "lut" => queries.withColumn("__lut", pq_lut(col(queryVec), books))
-    case "dot" => queries
-    case other => throw new IllegalArgumentException(
-      s"""scan="$other" — use "lut" or "dot"""")
-  }
-
-  private[llmops] def adcScore(pairs: DataFrame,
-                               books: Array[Array[Array[Float]]],
-                               queryVec: String, scan: String): DataFrame = scan match {
+                              lists: Option[Column],
+                              corpusId: String, queryId: String,
+                              queryVec: String,
+                              coarse: Option[Column] = None): DataFrame = {
+    val withLut = queries.withColumn("__lut", pq_lut(col(queryVec), books))
+    val pairs = lists match {
+      case None => coded.crossJoin(broadcast(withLut))
+      case Some(ls) =>
+        // the lut projection sits BELOW the probe explode — in the same
+        // select it would land in the Project above Generate and rebuild
+        // the m·k table once per probed list instead of once per query
+        val probes = withLut.withColumn("list_id", explode(ls))
+        coded.join(broadcast(coarse.fold(probes)(
+          probes.withColumn("__cdot", _))), Seq("list_id"))
+    }
+    val lutDot = pq_lut_dot(col("codes"), col("__lut"), books(0).length)
     // fast_round, not functions.round: Spark's double round goes
     // through BigDecimal.valueOf (a Double.toString per row) and
     // measured ~20× the cost of the whole lookup-table kernel it
     // quantizes (AdcProbe, 51 M candidates) — and the pushed-down
     // null filter makes the join condition pay it a second time
-    case "lut" =>
-      pairs.withColumn("sim",
-          FastRound.fast_round(
-            pq_lut_dot(col("codes"), col("__lut"), books(0).length), 6))
-        .drop("__lut")
-    case _ =>
-      pairs.withColumn("sim",
-        FastRound.fast_round(
-          pq_adc_dot(col("codes"), col(queryVec), books), 6))
+    val scored = pairs
+      .withColumn("sim", FastRound.fast_round(
+        coarse.fold(lutDot)(_ => col("__cdot") + lutDot), 6))
+      .drop("__lut", "__cdot")
+      .filter(col(corpusId) =!= col(queryId))
+      // an unscorable candidate cannot rank — drop it rather than let
+      // a null score pad a sparse heap
+      .filter(col("sim").isNotNull)
+    VectorFuncs.rerankTopK(scored, k, queryId, corpusId)
   }
 
   /** Kernel behind [[CentroidResidual]]: vec − centroids(list), the
@@ -949,11 +952,11 @@ object Ivf {
     */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int,
               corpusId: String = "vec_id", corpusVec: String = "embedding",
-              queryId: String = "query_id", queryVec: String = "query_vec",
-              impl: String = "agg"): DataFrame = {
+              queryId: String = "query_id", queryVec: String = "query_vec")
+      : DataFrame = {
     val (mins, scales) = sq8Bounds(corpus, corpusVec)
     sq8TopKWithBounds(corpus, queries, k, mins, scales,
-      corpusId, corpusVec, queryId, queryVec, impl)
+      corpusId, corpusVec, queryId, queryVec)
   }
 
   /** [[sq8TopK]] with externally computed bounds — the same
@@ -964,8 +967,7 @@ object Ivf {
                         corpusId: String = "vec_id",
                         corpusVec: String = "embedding",
                         queryId: String = "query_id",
-                        queryVec: String = "query_vec",
-                        impl: String = "agg"): DataFrame = {
+                        queryVec: String = "query_vec"): DataFrame = {
     val coded = corpus.select(col(corpusId),
       sq8_encode(col(corpusVec), mins, scales).as("codes"))
     val scored = coded.crossJoin(broadcast(queries))
@@ -973,7 +975,7 @@ object Ivf {
         sq8_dot(col("codes"), col(queryVec), mins, scales), 6))
       .filter(col(corpusId) =!= col(queryId))
       .filter(col("sim").isNotNull)
-    VectorFuncs.rerankTopK(scored, k, queryId, corpusId, impl)
+    VectorFuncs.rerankTopK(scored, k, queryId, corpusId)
   }
 
   /** IVFADC (Jégou et al. 2011 §V): the standard composition of the
@@ -991,15 +993,15 @@ object Ivf {
                  m: Int = 8, codewords: Int = 16,
                  coarseIters: Int = 0, pqIters: Int = 0,
                  corpusId: String = "vec_id", corpusVec: String = "embedding",
-                 queryId: String = "query_id", queryVec: String = "query_vec",
-                 impl: String = "agg", scan: String = "lut"): DataFrame = {
+                 queryId: String = "query_id", queryVec: String = "query_vec")
+      : DataFrame = {
     val cents =
       if (coarseIters > 0)
         kmeansCentroids(corpus, nlist, coarseIters, corpusId, corpusVec)
       else sampleCentroids(corpus, nlist, corpusId, corpusVec)
     val books = pqCodebooks(corpus, m, codewords, pqIters, corpusId, corpusVec)
     ivfAdcTopKWithModels(corpus, queries, k, cents, books, nprobe,
-      corpusId, corpusVec, queryId, queryVec, impl, scan)
+      corpusId, corpusVec, queryId, queryVec)
   }
 
   /** [[ivfAdcTopK]] with externally trained coarse centroids and
@@ -1013,24 +1015,14 @@ object Ivf {
                            corpusId: String = "vec_id",
                            corpusVec: String = "embedding",
                            queryId: String = "query_id",
-                           queryVec: String = "query_vec",
-                           impl: String = "agg",
-                           scan: String = "lut"): DataFrame = {
+                           queryVec: String = "query_vec"): DataFrame = {
     val coded = corpus.select(col(corpusId),
       element_at(nearest_centroids(col(corpusVec), centroids, 1), 1)
         .as("list_id"),
       pqEncode(col(corpusVec), books).as("codes"))
-    // the lut projection sits BELOW the probe explode — in the same
-    // select it would land in the Project above Generate and rebuild
-    // the m·k table once per probed list instead of once per query
-    val probes = withLut(queries, queryVec, books, scan)
-      .withColumn("list_id",
-        explode(nearest_centroids(col(queryVec), centroids, nprobe)))
-    val scored = adcScore(coded.join(broadcast(probes), Seq("list_id")),
-        books, queryVec, scan)
-      .filter(col(corpusId) =!= col(queryId))
-      .filter(col("sim").isNotNull)
-    VectorFuncs.rerankTopK(scored, k, queryId, corpusId, impl)
+    adcTopK(coded, queries, k, books,
+      Some(nearest_centroids(col(queryVec), centroids, nprobe)),
+      corpusId, queryId, queryVec)
   }
 
   /** IMI+ADC: the full Babenko & Lempitsky multi-index composed with
@@ -1048,12 +1040,12 @@ object Ivf {
                  m: Int = 8, codewords: Int = 16,
                  imiIters: Int = 0, pqIters: Int = 0,
                  corpusId: String = "vec_id", corpusVec: String = "embedding",
-                 queryId: String = "query_id", queryVec: String = "query_vec",
-                 impl: String = "agg", scan: String = "lut"): DataFrame = {
+                 queryId: String = "query_id", queryVec: String = "query_vec")
+      : DataFrame = {
     val (c1, c2) = imiCentroids(corpus, kHalf, imiIters, corpusId, corpusVec)
     val books = pqCodebooks(corpus, m, codewords, pqIters, corpusId, corpusVec)
     imiAdcTopKWithModels(corpus, queries, k, c1, c2, books, p,
-      corpusId, corpusVec, queryId, queryVec, impl, scan)
+      corpusId, corpusVec, queryId, queryVec)
   }
 
   /** [[imiAdcTopK]] with externally trained half-codebooks and PQ
@@ -1068,22 +1060,14 @@ object Ivf {
                            corpusId: String = "vec_id",
                            corpusVec: String = "embedding",
                            queryId: String = "query_id",
-                           queryVec: String = "query_vec",
-                           impl: String = "agg",
-                           scan: String = "lut"): DataFrame = {
+                           queryVec: String = "query_vec"): DataFrame = {
     val coded = corpus.select(col(corpusId),
       element_at(imiLists(col(corpusVec), cents1, cents2, 1), 1)
         .as("list_id"),
       pqEncode(col(corpusVec), books).as("codes"))
-    // lut below the probe explode, as in ivfAdcTopKWithModels
-    val probes = withLut(queries, queryVec, books, scan)
-      .withColumn("list_id",
-        explode(imiLists(col(queryVec), cents1, cents2, p)))
-    val scored = adcScore(coded.join(broadcast(probes), Seq("list_id")),
-        books, queryVec, scan)
-      .filter(col(corpusId) =!= col(queryId))
-      .filter(col("sim").isNotNull)
-    VectorFuncs.rerankTopK(scored, k, queryId, corpusId, impl)
+    adcTopK(coded, queries, k, books,
+      Some(imiLists(col(queryVec), cents1, cents2, p)),
+      corpusId, queryId, queryVec)
   }
 
   /** Residual-encoding IVFADC — IVFADC *proper* (Jégou et al. 2011
@@ -1104,9 +1088,7 @@ object Ivf {
                          corpusId: String = "vec_id",
                          corpusVec: String = "embedding",
                          queryId: String = "query_id",
-                         queryVec: String = "query_vec",
-                         impl: String = "agg",
-                         scan: String = "lut"): DataFrame = {
+                         queryVec: String = "query_vec"): DataFrame = {
     val cents =
       if (coarseIters > 0)
         kmeansCentroids(corpus, nlist, coarseIters, corpusId, corpusVec)
@@ -1114,7 +1096,7 @@ object Ivf {
     val books = pqCodebooksResidual(corpus, cents, m, codewords, pqIters,
       corpusId, corpusVec)
     ivfAdcResidualTopKWithModels(corpus, queries, k, cents, books, nprobe,
-      corpusId, corpusVec, queryId, queryVec, impl, scan)
+      corpusId, corpusVec, queryId, queryVec)
   }
 
   /** [[ivfAdcResidualTopK]] with externally trained models. */
@@ -1126,9 +1108,8 @@ object Ivf {
                                    corpusId: String = "vec_id",
                                    corpusVec: String = "embedding",
                                    queryId: String = "query_id",
-                                   queryVec: String = "query_vec",
-                                   impl: String = "agg",
-                                   scan: String = "lut"): DataFrame = {
+                                   queryVec: String = "query_vec")
+      : DataFrame = {
     // assignment in its own projection, residual-encode above it — the
     // residual needs the assigned list, so the two stay separate
     // projections inside one whole-stage-codegen span
@@ -1139,23 +1120,9 @@ object Ivf {
       .select(col(corpusId), col("list_id"),
         pqEncode(centroid_residual(col(corpusVec), col("list_id"),
           centroids), books).as("codes"))
-    val probes = withLut(queries, queryVec, books, scan)
-      .withColumn("list_id",
-        explode(nearest_centroids(col(queryVec), centroids, nprobe)))
-      .withColumn("__cdot",
-        centroid_dot(col(queryVec), col("list_id"), centroids))
-    val joined = coded.join(broadcast(probes), Seq("list_id"))
-    val scored = (scan match {
-      case "lut" => joined.withColumn("sim",
-          FastRound.fast_round(col("__cdot") +
-            pq_lut_dot(col("codes"), col("__lut"), books(0).length), 6))
-        .drop("__lut")
-      case _ => joined.withColumn("sim",
-        FastRound.fast_round(col("__cdot") +
-          pq_adc_dot(col("codes"), col(queryVec), books), 6))
-    }).drop("__cdot")
-      .filter(col(corpusId) =!= col(queryId))
-      .filter(col("sim").isNotNull)
-    VectorFuncs.rerankTopK(scored, k, queryId, corpusId, impl)
+    adcTopK(coded, queries, k, books,
+      Some(nearest_centroids(col(queryVec), centroids, nprobe)),
+      corpusId, queryId, queryVec,
+      coarse = Some(centroid_dot(col(queryVec), col("list_id"), centroids)))
   }
 }

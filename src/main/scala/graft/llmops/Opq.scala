@@ -356,12 +356,12 @@ object Opq {
               m: Int = 8, codewords: Int = 16,
               pqIters: Int = 1, opqIters: Int = 2,
               corpusId: String = "vec_id", corpusVec: String = "embedding",
-              queryId: String = "query_id", queryVec: String = "query_vec",
-              impl: String = "agg", scan: String = "lut"): DataFrame = {
+              queryId: String = "query_id", queryVec: String = "query_vec")
+      : DataFrame = {
     val (rot, books) = trainOpq(corpus, m, codewords, pqIters, opqIters,
       corpusId, corpusVec)
     opqTopKWithModels(corpus, queries, k, rot, books,
-      corpusId, corpusVec, queryId, queryVec, impl, scan)
+      corpusId, corpusVec, queryId, queryVec)
   }
 
   /** OPQ ANN query with externally trained models — rotate both sides
@@ -378,14 +378,12 @@ object Opq {
                         corpusId: String = "vec_id",
                         corpusVec: String = "embedding",
                         queryId: String = "query_id",
-                        queryVec: String = "query_vec",
-                        impl: String = "agg",
-                        scan: String = "lut"): DataFrame = {
+                        queryVec: String = "query_vec"): DataFrame = {
     val rc = corpus.select(col(corpusId),
       mat_vec(col(corpusVec), rot).as(corpusVec))
     val rq = queries.select(col(queryId),
       mat_vec(col(queryVec), rot).as(queryVec))
     Ivf.pqTopKWithBooks(rc, rq, k, books,
-      corpusId, corpusVec, queryId, queryVec, impl, scan)
+      corpusId, corpusVec, queryId, queryVec)
   }
 }

@@ -3,6 +3,8 @@ package graft.llmops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.ParquetStore
+
 /** The composed retrieval path a user actually runs — text in,
   * persisted searchable index out, questions in, passages out — with
   * nothing external: sentence-aligned chunking (X100), the
@@ -144,17 +146,7 @@ object Retrieval {
     * missing paths without throwing, so no catch is correct here.
     */
   private def hasLexical(spark: SparkSession, path: String): Boolean =
-    dirExists(spark, s"$path/lexical/params")
-
-  private def dirExists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
-  }
-
-  private def deleteDir(spark: SparkSession, p: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
-  }
+    ParquetStore.exists(spark, s"$path/lexical/params")
 
   /** Tombstone-delete documents from a built index — the takedown
     * path (a removal request against a 100 TB serving corpus must not
@@ -175,7 +167,7 @@ object Retrieval {
   def deleteDocs(spark: SparkSession, path: String, docIds: DataFrame,
                  idCol: String = "doc_id"): Unit = {
     val lex = hasLexical(spark, path)
-    require(!lex || dirExists(spark, s"$path/lexical/doclens"),
+    require(!lex || ParquetStore.exists(spark, s"$path/lexical/doclens"),
       s"$path/lexical predates deletion support; run Retrieval.compact " +
         "once to upgrade the layout before deleting")
     val vecIds = spark.read.parquet(s"$path/chunks")
@@ -240,7 +232,7 @@ object Retrieval {
     * after a crash or a deletion backlog, not on a schedule.
     */
   def compact(spark: SparkSession, path: String): Unit = {
-    val hadTombs = dirExists(spark, s"$path/chunk_tombstones")
+    val hadTombs = ParquetStore.exists(spark, s"$path/chunk_tombstones")
     val raw = spark.read.parquet(s"$path/chunks")
       .dropDuplicates("vec_id")
     val deduped = (if (hadTombs)
@@ -263,7 +255,7 @@ object Retrieval {
       // overwrite clears the ANN ones
       Bm25Index.write(deduped, s"$path/lexical",
         idCol = "vec_id", textCol = "chunk_text")
-    if (hadTombs) deleteDir(spark, s"$path/chunk_tombstones")
+    if (hadTombs) ParquetStore.delete(spark, s"$path/chunk_tombstones")
   }
 
   // ------------------------------------------------------------------
@@ -305,7 +297,7 @@ object Retrieval {
     val dst = VersionedIndex.versionPath(root, v)
     val raw = spark.read.parquet(s"$src/chunks").dropDuplicates("vec_id")
     val deduped =
-      if (dirExists(spark, s"$src/chunk_tombstones"))
+      if (ParquetStore.exists(spark, s"$src/chunk_tombstones"))
         raw.join(spark.read.parquet(s"$src/chunk_tombstones")
             .select(col("vec_id")).distinct(),
           Seq("vec_id"), "left_anti")
@@ -345,16 +337,6 @@ object Retrieval {
     search(spark, VersionedIndex.currentPath(spark, root), queries, k,
       nprobe, queryId, textCol)
 
-  /** Diversified retrieval: [[search]] fetches `fetchK` candidates per
-    * question, each hit's chunk text re-embeds in the SAME hash space
-    * the index was built in (the true vectors are PQ-coded on disk —
-    * re-embedding k·|queries| short chunks is cheaper than storing
-    * raw floats corpus-wide), and [[Mmr.rerank]] greedily keeps the
-    * `k` most relevant-but-mutually-distinct passages. The standard
-    * fetchK ≈ 3–5× k over-retrieve-then-diversify pattern; every
-    * stage is individually verified (q135 serve, q132 embedding, q140
-    * greedy).
-    */
   /** Document-level roll-up of chunk-level hits (SURVEY §2.10 X127):
     * a chunk index retrieves PASSAGES, but most consumers want
     * documents — a doc's relevance is its best chunk's similarity
@@ -510,6 +492,16 @@ object Retrieval {
         col("recall_at_k"), col("mrr_at_k"), col("ndcg_at_k"))
   }
 
+  /** Diversified retrieval: [[search]] fetches `fetchK` candidates per
+    * question, each hit's chunk text re-embeds in the SAME hash space
+    * the index was built in (the true vectors are PQ-coded on disk —
+    * re-embedding k·|queries| short chunks is cheaper than storing
+    * raw floats corpus-wide), and [[Mmr.rerank]] greedily keeps the
+    * `k` most relevant-but-mutually-distinct passages. The standard
+    * fetchK ≈ 3–5× k over-retrieve-then-diversify pattern; every
+    * stage is individually verified (q135 serve, q132 embedding, q140
+    * greedy).
+    */
   def searchDiverse(spark: SparkSession, path: String, queries: DataFrame,
                     k: Int = 5, fetchK: Int = 20, nprobe: Int = 4,
                     lambda: Double = 0.7,
@@ -559,16 +551,7 @@ object Retrieval {
   def rrfFuse(a: DataFrame, b: DataFrame, k: Int, rrfK: Int = 60,
               queryId: String = "query_id",
               idCol: String = "doc_id"): DataFrame = {
-    // the re-rank rides the (long, double) bounded heap: a string id
-    // would silently cast to null — fail loudly instead (hash the ids
-    // to longs and join back, the repo-wide pattern)
-    Seq(a, b).foreach { side =>
-      import org.apache.spark.sql.types._
-      val dt = side.schema(idCol).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"rrfFuse needs an integral id column, got '$idCol': " +
-          dt.simpleString)
-    }
+    Seq(a, b).foreach(TopK.requireIntegralId(_, idCol, "Retrieval.rrfFuse"))
     val fused = a
       .select(col(queryId), col(idCol), col("rk").as("__ra"))
       .join(b.select(col(queryId), col(idCol), col("rk").as("__rb")),

@@ -170,6 +170,17 @@ object Splits {
     docs.join(keep, Seq(idCol), "left_semi")
   }
 
+  /** The shared race key: u from the first 48 md5 bits of
+    * (id ++ seed), key = −ln(u)/w. ONE definition — both samplers and
+    * both DuckDB oracles must replay the identical arithmetic.
+    */
+  private def raceKey(idCol: String, seed: String, w: Column): Column = {
+    val u = (conv(substring(md5(concat(col(idCol).cast("string"),
+        lit(seed))), 1, 12), 16, 10).cast("long").cast("double") + 0.5) /
+      lit(281474976710656.0) // 2^48
+    -log(u) / w
+  }
+
   /** Deterministic weighted sampling WITHOUT replacement (SURVEY
     * §2.10 X125) — Efraimidis & Spirakis 2006 via the exponential
     * race: item i draws `u_i` uniform in (0,1) and wins a slot iff
@@ -194,17 +205,6 @@ object Splits {
     * @return the k winning rows (all original columns) plus
     *         `race_key`, smallest key first
     */
-  /** The shared race key: u from the first 48 md5 bits of
-    * (id ++ seed), key = −ln(u)/w. ONE definition — both samplers and
-    * both DuckDB oracles must replay the identical arithmetic.
-    */
-  private def raceKey(idCol: String, seed: String, w: Column): Column = {
-    val u = (conv(substring(md5(concat(col(idCol).cast("string"),
-        lit(seed))), 1, 12), 16, 10).cast("long").cast("double") + 0.5) /
-      lit(281474976710656.0) // 2^48
-    -log(u) / w
-  }
-
   def weightedSample(docs: DataFrame, weight: Column, k: Int,
                      seed: String,
                      idCol: String = "doc_id"): DataFrame = {

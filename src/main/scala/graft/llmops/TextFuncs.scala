@@ -659,28 +659,6 @@ object TextFuncs {
       .select(docs.columns.map(col): _*)
   }
 
-  /** Monolingual line segments of a (possibly code-mixed) document —
-    * the CCNet move at line granularity: web pages routinely mix
-    * languages (an English nav around German prose, quoted passages,
-    * bilingual docs), and a document-level language id either drops
-    * the whole page or keeps the noise. Each line classifies with the
-    * shared [[langIdFromTokens]] heuristic and CONSECUTIVE same-label
-    * lines merge into one segment, so downstream per-language
-    * pipelines (quality gates, dedup, mixing quotas) operate on
-    * monolingual units. Blank/unclassifiable lines label "und" and
-    * form their own segments — a deterministic, honest boundary
-    * (dropping or re-attaching them is the caller's policy).
-    *
-    * Output: one row per segment — (idCol, seg_idx, lang, n_lines,
-    * seg_text), seg_idx ordered by position in the document.
-    *
-    * Scale shape: posexplode to slim (id, pos, line) rows; language
-    * is a pure projection; runs form via the gaps-and-islands rank
-    * difference (pos − row_number within (doc, lang)) — both windows
-    * partition by doc, bounded by a document's line count, never
-    * global; reassembly is one groupBy with an in-group sort. The
-    * oracle (q146) replays the entire rule relationally.
-    */
   /** Class-based TF-IDF cluster labeling (SURVEY §2.10 X130) — the
     * BERTopic-style c-TF-IDF move: after clustering (X60 semantic
     * clusters, or any grouping column), each cluster labels itself
@@ -991,6 +969,28 @@ object TextFuncs {
         ((log(col("n_chars")) - col("__sklnk") / col("n_chars")) /
           math.log(2.0)).as("char_entropy"))
 
+  /** Monolingual line segments of a (possibly code-mixed) document —
+    * the CCNet move at line granularity: web pages routinely mix
+    * languages (an English nav around German prose, quoted passages,
+    * bilingual docs), and a document-level language id either drops
+    * the whole page or keeps the noise. Each line classifies with the
+    * shared [[langIdFromTokens]] heuristic and CONSECUTIVE same-label
+    * lines merge into one segment, so downstream per-language
+    * pipelines (quality gates, dedup, mixing quotas) operate on
+    * monolingual units. Blank/unclassifiable lines label "und" and
+    * form their own segments — a deterministic, honest boundary
+    * (dropping or re-attaching them is the caller's policy).
+    *
+    * Output: one row per segment — (idCol, seg_idx, lang, n_lines,
+    * seg_text), seg_idx ordered by position in the document.
+    *
+    * Scale shape: posexplode to slim (id, pos, line) rows; language
+    * is a pure projection; runs form via the gaps-and-islands rank
+    * difference (pos − row_number within (doc, lang)) — both windows
+    * partition by doc, bounded by a document's line count, never
+    * global; reassembly is one groupBy with an in-group sort. The
+    * oracle (q146) replays the entire rule relationally.
+    */
   def lineLangSegments(docs: DataFrame, idCol: String = "doc_id",
                        textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -1,6 +1,6 @@
 package graft.llmops
 
-import org.apache.spark.sql.{Column, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
@@ -89,6 +89,22 @@ object TopK {
         ColumnBridge.expression(scoreCol.cast("double")), k,
         payloadCol.map(c => ColumnBridge.expression(c.cast("long"))))
       .toAggregateExpression()).as("topk")
+  }
+
+  /** The heap entry's id is a long: an integral id widens losslessly,
+    * while a `cast("long")` of a string or uuid id nulls every id and
+    * returns an empty or garbage ranking with no error. The schema says
+    * which, so `caller` fails fast instead. A string-keyed corpus (URLs,
+    * content hashes) ranks on `xxhash64(id)` and joins the ids back.
+    */
+  private[llmops] def requireIntegralId(df: DataFrame, idCol: String,
+                                        caller: String): Unit = {
+    import org.apache.spark.sql.types._
+    val dt = df.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+      s"$caller needs an integral id column, got '$idCol': " +
+        s"${dt.simpleString} — rank on xxhash64($idCol) and join the " +
+        "original ids back")
   }
 
   /** The pre-round-5 UDAF plan shape, kept callable for comparison. */

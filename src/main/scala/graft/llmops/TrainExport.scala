@@ -57,9 +57,8 @@ object TrainExport {
     require(nShards >= 1, "nShards must be >= 1")
     // a string-keyed corpus would silently null every doc_id under the
     // cast below, producing a corrupt (null-id, order-unstable) export
-    // — fail loudly instead (the Bm25 integral-id precedent: rank on
-    // xxhash64(id) and join the original ids back)
-    Bm25.requireIntegralId(docs, idCol, "export doc")
+    // — fail loudly instead
+    TopK.requireIntegralId(docs, idCol, "TrainExport.epochFragments")
     val L = seqLen.toLong
     val keyed = docs.select(col(idCol).cast("long").as("doc_id"),
         TextFuncs.tokenCount(col(textCol)).cast("long").as("n_toks"))
@@ -145,7 +144,7 @@ object TrainExport {
     // same loud id contract as epochFragments: a string-id takedown
     // list would cast to all-null and silently report ZERO affected
     // sequences — the worst possible failure for a takedown audit
-    Bm25.requireIntegralId(docIds, "doc_id", "takedown")
+    TopK.requireIntegralId(docIds, "doc_id", "TrainExport.affectedSequences")
     val ids = docIds.select(col("doc_id").cast("long").as("doc_id"))
       .distinct().withColumn("__dm", lit(1))
     s.read.parquet(s"$path/fragments")

@@ -249,71 +249,41 @@ object VectorFuncs {
       DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** Per-query top-k re-rank of a scored candidate set — the shared
-    * tail of every similarity-search entry point.
-    *
-    * `impl = "agg"` (the default everywhere): bounded-heap partial
-    * aggregation ([[TopK]]) — each partition pre-reduces to ≤k
+    * tail of every similarity-search entry point. Bounded-heap partial
+    * aggregation ([[TopK]]): each partition pre-reduces to ≤k
     * candidates per query before the shuffle (map-side combine), so
     * the exchange carries ≤ partitions·|queries|·k slim pairs no
-    * matter how large the candidate set is. Requires a LONG id column
+    * matter how large the candidate set is. Ties break id-ascending,
+    * so the result equals a `row_number` window over (sim desc, id) —
+    * the form the oracles replay — without funnelling every candidate
+    * through |queries| window reducers. Requires an integral id column
     * (the heap entry type).
-    *
-    * `impl = "window"`: the rank-window formulation. It funnels EVERY
-    * candidate row through |queries| window reducers — the known
-    * scale-killer — and exists only as the oracle anchor (DuckDB
-    * replays it as a ROW_NUMBER window) and for non-long id columns.
-    * Results are bit-identical between the two (same score-desc,
-    * id-asc tie-break; top-k of a union is the top-k of per-part
-    * top-ks); only the physical plan differs.
     */
   private[llmops] def rerankTopK(scored: DataFrame, k: Int,
-                                 queryId: String, corpusId: String,
-                                 impl: String): DataFrame = impl match {
-    case "agg" =>
-      // the bounded-heap entry is a long — an integral id widens
-      // losslessly, anything else (string/uuid ids) would cast to null
-      // and silently corrupt the result; fail fast instead
-      scored.schema(corpusId).dataType match {
-        case org.apache.spark.sql.types.LongType
-           | org.apache.spark.sql.types.IntegerType
-           | org.apache.spark.sql.types.ShortType
-           | org.apache.spark.sql.types.ByteType => ()
-        case other => throw new IllegalArgumentException(
-          s"""impl="agg" needs an integral id column; "$corpusId" is """ +
-            s"""$other — use impl="window" or map ids to longs first""")
-      }
-      scored
-        .groupBy(col(queryId))
-        .agg(TopK.topK(col(corpusId), col("sim"), k).as("topk"))
-        .select(col(queryId), posexplode(col("topk")).as(Seq("pos", "t")))
-        .select(col(queryId), col("t._1").as(corpusId),
-          col("t._2").as("sim"), (col("pos") + 1).cast("int").as("rk"))
-    case "window" =>
-      val w = Window.partitionBy(col(queryId))
-        .orderBy(col("sim").desc, col(corpusId))
-      scored
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k)
-        .select(col(queryId), col(corpusId), col("sim"), col("rk"))
-    case other =>
-      throw new IllegalArgumentException(
-        s"""impl must be "agg" or "window", got "$other"""")
+                                 queryId: String,
+                                 corpusId: String): DataFrame = {
+    TopK.requireIntegralId(scored, corpusId, "the vector top-k re-rank")
+    scored
+      .groupBy(col(queryId))
+      .agg(TopK.topK(col(corpusId), col("sim"), k).as("topk"))
+      .select(col(queryId), posexplode(col("topk")).as(Seq("pos", "t")))
+      .select(col(queryId), col("t._1").as(corpusId),
+        col("t._2").as("sim"), (col("pos") + 1).cast("int").as("rk"))
   }
 
   /** Brute-force top-k nearest neighbours by cosine similarity.
     *
     * `queries` must be small (it is broadcast); the corpus streams
     * map-side. This is the exact baseline; [[lshTopK]] / [[Ivf.ivfTopK]]
-    * are the sublinear variants. The default re-rank is the scale-safe
-    * bounded-heap aggregation — see [[rerankTopK]] for the `impl`
-    * contract and why "window" is an oracle-anchor-only escape hatch.
+    * are the sublinear variants. The re-rank is the scale-safe
+    * bounded-heap aggregation ([[rerankTopK]]).
     *
     * Output: (query_id, vec_id, sim, rk).
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      corpusId: String = "vec_id", corpusVec: String = "embedding",
                      queryId: String = "query_id", queryVec: String = "query_vec",
-                     impl: String = "agg", metric: String = "cosine")
+                     metric: String = "cosine")
       : DataFrame = {
     val score = metric match {
       case "cosine" => cosine(col(corpusVec), col(queryVec))
@@ -324,30 +294,13 @@ object VectorFuncs {
         s"""metric must be "cosine" or "dot", got "$other"""")
     }
     val scored = corpus.join(broadcast(queries)).withColumn("sim", score)
-    rerankTopK(scored, k, queryId, corpusId, impl)
+    rerankTopK(scored, k, queryId, corpusId)
   }
-
-  /** Alias for `bruteForceTopK(impl = "agg")`, kept for source compat
-    * with round-3 callers; the agg plan is the default now.
-    */
-  def bruteForceTopKAgg(corpus: DataFrame, queries: DataFrame, k: Int,
-                        corpusId: String = "vec_id", corpusVec: String = "embedding",
-                        queryId: String = "query_id", queryVec: String = "query_vec")
-      : DataFrame =
-    bruteForceTopK(corpus, queries, k, corpusId, corpusVec, queryId, queryVec,
-      impl = "agg")
 
   /** Random-hyperplane LSH bucket id — see [[RhpBucket]]. */
   def rhpBucket(vec: Column, planes: Int, seed: Long = 42L): Column =
     ColumnBridge.column(RhpBucket(ColumnBridge.expression(vec), planes, seed))
 
-  /** LSH-bucketed approximate top-k: corpus and queries are bucketed by
-    * [[rhpBucket]]; candidates = corpus rows sharing the query's bucket
-    * (plus optional multi-probe neighbours at Hamming distance 1), then
-    * exact cosine re-ranking within the candidate set. At scale the
-    * bucket column is a partition key: each query touches 1/2^planes of
-    * the corpus instead of all of it.
-    */
   /** Multi-probe bucket list for a query set: the query's own bucket
     * plus all 1-bit flips. Exposed so callers (and the verify dump) can
     * materialize the exact probe set [[lshTopK]] joins on.
@@ -364,19 +317,25 @@ object VectorFuncs {
       .dropDuplicates(queryId, "bucket")
   }
 
+  /** LSH-bucketed approximate top-k: corpus and queries are bucketed by
+    * [[rhpBucket]]; candidates = corpus rows sharing the query's bucket
+    * (plus optional multi-probe neighbours at Hamming distance 1), then
+    * exact cosine re-ranking within the candidate set. At scale the
+    * bucket column is a partition key: each query touches 1/2^planes of
+    * the corpus instead of all of it.
+    */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, planes: Int = 8,
               corpusId: String = "vec_id", corpusVec: String = "embedding",
-              queryId: String = "query_id", queryVec: String = "query_vec",
-              impl: String = "agg")
+              queryId: String = "query_id", queryVec: String = "query_vec")
       : DataFrame = {
     val cb = corpus.withColumn("bucket", rhpBucket(col(corpusVec), planes))
     val qb = lshProbes(queries, planes, queryId, queryVec)
     val scored = cb.join(broadcast(qb), Seq("bucket"))
       .withColumn("sim", cosine(col(corpusVec), col(queryVec)))
     // bucketing prunes candidates ~2^planes-fold, but at corpus scale a
-    // query's bucket can still hold millions of rows — same re-rank
-    // discipline as the brute-force path (impl contract: [[rerankTopK]])
-    rerankTopK(scored, k, queryId, corpusId, impl)
+    // query's bucket can still hold millions of rows — same bounded-heap
+    // re-rank as the brute-force path ([[rerankTopK]])
+    rerankTopK(scored, k, queryId, corpusId)
   }
 
   /** Margin-ordered multi-probe sequence — see [[RhpProbes]]. */
@@ -413,27 +372,16 @@ object VectorFuncs {
                         corpusId: String = "vec_id",
                         corpusVec: String = "embedding",
                         queryId: String = "query_id",
-                        queryVec: String = "query_vec",
-                        impl: String = "agg"): DataFrame = {
+                        queryVec: String = "query_vec"): DataFrame = {
     val cb = corpus.withColumn("bucket", rhpBucket(col(corpusVec), planes))
     val qb = lshMultiProbes(queries, planes, nprobe, queryId, queryVec)
     val scored = cb.join(broadcast(qb), Seq("bucket"))
       .withColumn("sim", cosine(col(corpusVec), col(queryVec)))
-    rerankTopK(scored, k, queryId, corpusId, impl)
+    rerankTopK(scored, k, queryId, corpusId)
   }
 
   // ---------------------------------------------- feature-hash embedder
 
-  /** Signed feature-hashing core (Weinberger et al. 2009, the hashing
-    * trick): each token OCCURRENCE lands in bucket
-    * `md5[0:8] mod dim` with sign `md5[8] < '8' ? +1 : -1`, and the
-    * per-(doc, bucket) signed counts are the raw sparse embedding. All
-    * integer and md5-deterministic, so any engine replays every bucket
-    * and value exactly — this is the oracle-checkable half of
-    * [[hashedEmbedding]]. Empty tokens are dropped. One count
-    * aggregation over slim (id, bucket, sign) rows; text never
-    * shuffles.
-    */
   /** The ONE hash space both embedders live in: explode tokens, drop
     * empties, bucket = md5[0:8] mod dim, sign = md5[8] < '8'. Shared
     * so count- and tfidf-embedded corpora stay ANN-compatible by
@@ -453,6 +401,16 @@ object VectorFuncs {
         when(substring(h, 9, 1) < "8", 1L).otherwise(-1L))
   }
 
+  /** Signed feature-hashing core (Weinberger et al. 2009, the hashing
+    * trick): each token OCCURRENCE lands in bucket
+    * `md5[0:8] mod dim` with sign `md5[8] < '8' ? +1 : -1`, and the
+    * per-(doc, bucket) signed counts are the raw sparse embedding. All
+    * integer and md5-deterministic, so any engine replays every bucket
+    * and value exactly — this is the oracle-checkable half of
+    * [[hashedEmbedding]]. Empty tokens are dropped. One count
+    * aggregation over slim (id, bucket, sign) rows; text never
+    * shuffles.
+    */
   def hashedBuckets(docs: DataFrame, dim: Int,
                     idCol: String = "doc_id",
                     textCol: String = "text"): DataFrame =

@@ -407,25 +407,6 @@ object Vocab {
         col("oov_types").cast("double") / col("n_types"))
   }
 
-  /** Heaps'-law vocabulary-growth profile (X196): vocabulary size at
-    * nested corpus prefixes, plus the fitted growth exponent — the
-    * "how much NEW vocabulary does more data buy" number that prices
-    * corpus acquisition and sizes tokenizer vocabularies (Heaps 1978:
-    * V ≈ K·N^β, β ≈ 0.4-0.6 for natural text; β near 0 means the
-    * corpus is saturating — more of the same — and β near 1 flags
-    * id/hash spill inflating the vocabulary).
-    *
-    * Prefixes are deterministic id-ordered slices (doc_id below the
-    * fraction cutoff), so the profile is reproducible and the oracle
-    * replays it; each checkpoint is one distinct-count aggregate over
-    * the pruned slice — the scan prunes on the id predicate, nothing
-    * global. β is the two-point log-log fit between the smallest and
-    * largest checkpoints, computed per row (constant column) so the
-    * scalar travels with the frame.
-    *
-    * @return one row per checkpoint: (fraction, n_docs, n_tokens,
-    *         vocab, beta) — beta 4dp
-    */
   /** Good–Turing unseen-mass estimate (X212; Good 1953, the
     * missing-mass half of the Gale & Sampson simple-GT recipe): the
     * probability that the NEXT token drawn from a source is a type
@@ -524,6 +505,25 @@ object Vocab {
       .limit(k)
   }
 
+  /** Heaps'-law vocabulary-growth profile (X196): vocabulary size at
+    * nested corpus prefixes, plus the fitted growth exponent — the
+    * "how much NEW vocabulary does more data buy" number that prices
+    * corpus acquisition and sizes tokenizer vocabularies (Heaps 1978:
+    * V ≈ K·N^β, β ≈ 0.4-0.6 for natural text; β near 0 means the
+    * corpus is saturating — more of the same — and β near 1 flags
+    * id/hash spill inflating the vocabulary).
+    *
+    * Prefixes are deterministic id-ordered slices (doc_id below the
+    * fraction cutoff), so the profile is reproducible and the oracle
+    * replays it; each checkpoint is one distinct-count aggregate over
+    * the pruned slice — the scan prunes on the id predicate, nothing
+    * global. β is the two-point log-log fit between the smallest and
+    * largest checkpoints, computed per row (constant column) so the
+    * scalar travels with the frame.
+    *
+    * @return one row per checkpoint: (fraction, n_docs, n_tokens,
+    *         vocab, beta) — beta 4dp
+    */
   def heapsProfile(docs: DataFrame, fractions: Seq[Double] =
                      Seq(0.125, 0.25, 0.5, 1.0),
                    idCol: String = "doc_id", textCol: String = "text")

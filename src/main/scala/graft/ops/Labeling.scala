@@ -299,29 +299,6 @@ object Labeling {
           round(lit(1.0) - col("__do") / col("__de"), 4)).as("alpha"))
   }
 
-  /** Krippendorff's alpha, INTERVAL data (X236; Krippendorff 2004) —
-    * the alpha for numeric ratings (Likert-as-interval, scores,
-    * spans), where the nominal metric over-penalizes near-misses: the
-    * difference function is δ²(v, v') = (v − v')², so raters at 4 vs
-    * 5 on a 5-point scale mostly agree instead of purely disagreeing.
-    * Same unit semantics as [[krippendorffAlpha]]: any rater count,
-    * missing labels fine, units with fewer than 2 ratings dropped.
-    *
-    * The pairwise squared differences collapse algebraically —
-    * Σ_{i,j}(x_i − x_j)² = 2(m·Σx² − (Σx)²) — so NO within-unit
-    * pair join exists:
-    *   D_o = (1/n) Σ_u 2(m_u·S2_u − S1_u²)/(m_u − 1)
-    *   D_e = 2(n·S2 − S1²) / (n·(n − 1))
-    * with S1/S2 the plain and squared rating sums (per unit, and
-    * pooled over pairable rows). α = 1 − D_o/D_e, from the UNROUNDED
-    * ratios like the nominal form; null when D_e = 0 (zero variance).
-    *
-    * Scale shape: ONE item-keyed shuffle carrying (count, Σv, Σv²),
-    * then a one-row aggregate — each input row is consumed exactly
-    * once, the slimmest statistic in the family.
-    *
-    * @return one row: (n_pairable, d_o, d_e, alpha) — 4dp
-    */
   /** Krippendorff's alpha, ORDINAL data (X240; Krippendorff 2004) —
     * the third metric in the alpha family: ordered categories whose
     * spacing is NOT meaningful (severity grades, star ratings read as
@@ -471,6 +448,29 @@ object Labeling {
         coalesce(col("z") < -zThresh, lit(false)))
   }
 
+  /** Krippendorff's alpha, INTERVAL data (X236; Krippendorff 2004) —
+    * the alpha for numeric ratings (Likert-as-interval, scores,
+    * spans), where the nominal metric over-penalizes near-misses: the
+    * difference function is δ²(v, v') = (v − v')², so raters at 4 vs
+    * 5 on a 5-point scale mostly agree instead of purely disagreeing.
+    * Same unit semantics as [[krippendorffAlpha]]: any rater count,
+    * missing labels fine, units with fewer than 2 ratings dropped.
+    *
+    * The pairwise squared differences collapse algebraically —
+    * Σ_{i,j}(x_i − x_j)² = 2(m·Σx² − (Σx)²) — so NO within-unit
+    * pair join exists:
+    *   D_o = (1/n) Σ_u 2(m_u·S2_u − S1_u²)/(m_u − 1)
+    *   D_e = 2(n·S2 − S1²) / (n·(n − 1))
+    * with S1/S2 the plain and squared rating sums (per unit, and
+    * pooled over pairable rows). α = 1 − D_o/D_e, from the UNROUNDED
+    * ratios like the nominal form; null when D_e = 0 (zero variance).
+    *
+    * Scale shape: ONE item-keyed shuffle carrying (count, Σv, Σv²),
+    * then a one-row aggregate — each input row is consumed exactly
+    * once, the slimmest statistic in the family.
+    *
+    * @return one row: (n_pairable, d_o, d_e, alpha) — 4dp
+    */
   def krippendorffAlphaInterval(df: DataFrame, itemCol: String,
                                 valueCol: String): DataFrame = {
     val labeled = df

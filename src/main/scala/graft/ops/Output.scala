@@ -69,8 +69,8 @@ object Output {
     * as-is: one range exchange on the key, no new operator — the
     * layout is the optimization, which is exactly how engines ship
     * Z-ordering (Delta/Iceberg OPTIMIZE ZORDER).
-    */
-  /** `alignFiles = false` (default): file cuts at z-POPULATION
+    *
+    * `alignFiles = false` (default): file cuts at z-POPULATION
     * quantiles — balanced file sizes, but a cut can land mid-way
     * through a Morton quadrant, so a file's (a, b) rectangle may
     * straddle two quadrants and widen its min/max stats.

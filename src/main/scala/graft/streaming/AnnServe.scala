@@ -50,8 +50,7 @@ object AnnServe {
   def serve(spark: SparkSession, path: String, queries: DataFrame, k: Int,
             nprobe: Int = 4,
             corpusId: String = "vec_id",
-            queryId: String = "query_id", queryVec: String = "query_vec",
-            impl: String = "agg", scan: String = "lut")
+            queryId: String = "query_id", queryVec: String = "query_vec")
            (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     import graft.llmops.VersionedIndex
     val versioned = VersionedIndex.current(spark, path).isDefined
@@ -74,8 +73,7 @@ object AnnServe {
           }
         }
         sink(AnnIndex.topKWithModels(batch.sparkSession, servedPath, batch,
-          k, models._1, models._2, nprobe, corpusId, queryId, queryVec,
-          impl, scan),
+          k, models._1, models._2, nprobe, corpusId, queryId, queryVec),
           batchId)
       }
     }

@@ -1,6 +1,9 @@
 package graft.llmops
 
 import graft.{SparkTestBase, Tables}
+import graft.expr.FastRound
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class IvfSpec extends SparkTestBase {
@@ -9,6 +12,21 @@ class IvfSpec extends SparkTestBase {
   lazy val emb = Tables.embeddings(spark, sf0001).cache()
   lazy val q = emb.filter($"vec_id" < 10)
     .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
+
+  /** The ADC reference tail: drop self-pairs and unscorable
+    * candidates, rank by a row_number window (the RewriteWindowTopK
+    * rule off, so it stays a window), and collect every column.
+    */
+  private def windowTopK(scored: DataFrame, k: Int): Set[Seq[Any]] = {
+    spark.conf.set("spark.graft.rewriteWindowTopK", "false")
+    try scored.filter($"vec_id" =!= $"query_id").filter($"sim".isNotNull)
+      .withColumn("rk", row_number().over(
+        Window.partitionBy($"query_id").orderBy($"sim".desc, $"vec_id")))
+      .filter($"rk" <= k)
+      .select($"query_id", $"vec_id", $"sim", $"rk")
+      .collect().map(_.toSeq).toSet
+    finally spark.conf.unset("spark.graft.rewriteWindowTopK")
+  }
 
   test("IVF recall vs brute force on the clustered corpus") {
     val exact = VectorFuncs.bruteForceTopK(emb, q, k = 5)
@@ -146,24 +164,49 @@ class IvfSpec extends SparkTestBase {
     rows.foreach { case (l, d) =>
       assert(math.abs(l - d) < 1e-9, s"lut=$l dot=$d")
     }
-    // plan level: both scans produce the same ranked result
-    val viaLut = Ivf.pqTopKWithBooks(emb, q, k = 5, books, scan = "lut")
+    // plan level: the LUT scan ranks as the reconstruction dot does
+    val viaLut = Ivf.pqTopKWithBooks(emb, q, k = 5, books)
       .select($"query_id", $"vec_id", $"sim", $"rk")
       .collect().map(_.toSeq).toSet
-    val viaDot = Ivf.pqTopKWithBooks(emb, q, k = 5, books, scan = "dot")
-      .select($"query_id", $"vec_id", $"sim", $"rk")
-      .collect().map(_.toSeq).toSet
+    val viaDot = windowTopK(
+      emb.select($"vec_id", Ivf.pqEncode($"embedding", books).as("codes"))
+        .crossJoin(broadcast(q))
+        .withColumn("sim", FastRound.fast_round(
+          Ivf.pq_adc_dot($"codes", $"query_vec", books), 6)), 5)
+    assert(viaDot.size == 50)
     assert(viaLut == viaDot)
 
     // the null contract carries over: a wrong-dimension query builds
-    // no table and scores no candidates on either path
+    // no table and scores no candidates
     val shortQ = Seq((9000L, Seq.fill(32)(0.1f)))
       .toDF("query_id", "query_vec")
-    assert(Ivf.pqTopKWithBooks(emb, shortQ, k = 3, books, scan = "lut")
-      .count() == 0)
-    intercept[IllegalArgumentException] {
-      Ivf.pqTopKWithBooks(emb, q, k = 3, books, scan = "nope")
-    }
+    assert(Ivf.pqTopKWithBooks(emb, shortQ, k = 3, books).count() == 0)
+  }
+
+  test("residual IVFADC scores centroid dot plus the residual " +
+      "reconstruction dot") {
+    // dot(q, centroid + Σ codewords) = centroid_dot + pq_adc_dot over
+    // the residual codes, per probed list, rounded before ranking
+    val cents = Ivf.kmeansCentroids(emb, nlist = 8, iters = 1)
+    val books = Ivf.pqCodebooksResidual(emb, cents, m = 8, k = 16,
+      iters = 1)
+    val got = Ivf.ivfAdcResidualTopKWithModels(emb, q, k = 5, cents, books,
+        nprobe = 3)
+      .select($"query_id", $"vec_id", $"sim", $"rk")
+      .collect().map(_.toSeq).toSet
+    val coded = emb
+      .withColumn("list_id",
+        element_at(Ivf.nearest_centroids($"embedding", cents, 1), 1))
+      .select($"vec_id", $"list_id", Ivf.pqEncode(Ivf.centroid_residual(
+        $"embedding", $"list_id", cents), books).as("codes"))
+    val probes = q.withColumn("list_id",
+      explode(Ivf.nearest_centroids($"query_vec", cents, 3)))
+    val want = windowTopK(coded.join(probes, Seq("list_id"))
+      .withColumn("sim", FastRound.fast_round(
+        Ivf.centroid_dot($"query_vec", $"list_id", cents) +
+          Ivf.pq_adc_dot($"codes", $"query_vec", books), 6)), 5)
+    assert(want.size == 50)
+    assert(got == want)
   }
 
   test("IVFADC degenerates to the pure PQ scan with one list") {
@@ -197,7 +240,7 @@ class IvfSpec extends SparkTestBase {
       .withColumn("sim", VectorFuncs.dotp($"embedding", $"query_vec"))
     val trueDots = exactScored.select($"query_id", $"vec_id", $"sim")
     val sExact = VectorFuncs.rerankTopK(exactScored, 5, "query_id",
-        "vec_id", "agg")
+        "vec_id")
       .groupBy($"query_id").agg(sum($"sim").as("se"))
     def minRatio(df: org.apache.spark.sql.DataFrame): Double =
       df.select($"query_id", $"vec_id")
@@ -379,7 +422,7 @@ class IvfSpec extends SparkTestBase {
       .filter($"vec_id" =!= $"query_id")
       .withColumn("sim", VectorFuncs.dotp($"embedding", $"query_vec"))
     val exact = VectorFuncs.rerankTopK(exactScored, 5, "query_id",
-        "vec_id", "agg")
+        "vec_id")
       .select($"query_id", $"vec_id").as[(Long, Long)].collect().toSet
     val got = Ivf.sq8TopK(emb, q, k = 5)
       .select($"query_id", $"vec_id").as[(Long, Long)].collect().toSet

@@ -119,26 +119,33 @@ class VectorFuncsSpec extends SparkTestBase {
   }
 
   test("bounded-heap top-k aggregate matches the window formulation exactly") {
+    import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(spark, sf0001)
     val q = emb.filter($"vec_id" < 3)
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
-    // keep the window side a real window plan: the session-registered
+    // the reference: the same scored frame ranked by a row_number
+    // window. Keep it a real window plan: the session-registered
     // RewriteWindowTopK rule would otherwise rewrite it into the very
     // aggregate this test compares against (RewriteWindowTopKSpec
     // covers that path with its own rule-off differential)
+    val scored = emb.join(broadcast(q))
+      .withColumn("sim", VectorFuncs.cosine($"embedding", $"query_vec"))
     spark.conf.set("spark.graft.rewriteWindowTopK", "false")
     val viaWindow = try {
-      VectorFuncs.bruteForceTopK(emb, q, k = 10, impl = "window")
+      scored.withColumn("rk", row_number().over(
+          Window.partitionBy($"query_id").orderBy($"sim".desc, $"vec_id")))
+        .filter($"rk" <= 10)
         .select($"query_id", $"vec_id", $"rk").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     } finally spark.conf.unset("spark.graft.rewriteWindowTopK")
-    val viaAgg = VectorFuncs.bruteForceTopKAgg(emb, q, k = 10)
+    val viaAgg = VectorFuncs.bruteForceTopK(emb, q, k = 10)
       .select($"query_id", $"vec_id", $"rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(viaWindow.size == 30)
     assert(viaAgg == viaWindow)
     // the scale property: partial (map-side) aggregation before the
     // exchange — ObjectHashAggregate appears twice (partial + final)
-    val plan = VectorFuncs.bruteForceTopKAgg(emb, q, k = 10)
+    val plan = VectorFuncs.bruteForceTopK(emb, q, k = 10)
       .queryExecution.executedPlan.toString
     assert("ObjectHashAggregate".r.findAllIn(plan).size >= 2, plan.take(2000))
   }
@@ -181,7 +188,7 @@ class VectorFuncsSpec extends SparkTestBase {
 
   test("agg re-rank fails fast on non-integral id columns") {
     // string ids would cast to null and silently corrupt the top-k;
-    // the guard routes the caller to impl="window" instead
+    // the guard points the caller at hashing the ids instead
     val emb = Tables.embeddings(spark, sf0001)
       .withColumn("vec_id", concat(lit("v"), $"vec_id"))
     val q = Tables.embeddings(spark, sf0001).filter($"vec_id" < 3)
